@@ -38,26 +38,22 @@ object Caching {
     * if `result` is not already plan-cached (warm re-entry), pin
     * `intermediate` in ONE job (so the downstream self-join's map stages
     * never race to populate it), materialize `result`, then retire the
-    * intermediate. A warm call touches NOTHING — re-pinning the
+    * intermediate. Returns `result` with its materialized row count, so a
+    * caller that needs the cardinality (`clusterLabels`' edge-count bound)
+    * reuses this job instead of re-counting the cached frame; the count
+    * is -1 on the warm path. A warm call touches NOTHING — re-pinning the
     * intermediate would re-run its whole pipeline and leak the persist
     * (the dedup_containment regression ScaleSpec pins).
+    *
+    * The intermediate pin is [[pinOnce]] (cold-only), so a kernel already
+    * pinned AND counted by a warm entry (Bench's untimed kernel warm, a
+    * composed consumer) skips a redundant cache-read count job. That is
+    * sound only while every intermediate passed here is pinned through a
+    * counting path (pinOnce or this method), never lazily through
+    * [[ensureCached]]: a cached-but-unpopulated intermediate would bring
+    * back the concurrent cache-population race.
     */
-  def materializeRetiring(result: DataFrame, intermediate: DataFrame): DataFrame =
-    materializeRetiringCounted(result, intermediate)._1
-
-  /** [[materializeRetiring]] returning the materialized row count of
-    * `result` as well (-1 on the warm path, where nothing runs). Two r22
-    * job-count cuts (VERDICT r21 item 4 — every job boundary is
-    * contention exposure): callers that need the cardinality anyway
-    * (`clusterLabels`' edge-count bound) reuse the materialization job
-    * instead of re-counting the cached frame, and the intermediate pin is
-    * [[pinOnce]] (cold-only) — a kernel already pinned AND counted by a
-    * warm entry (Bench's untimed kernel warm, a composed consumer) skips
-    * the redundant cache-read count job. Every in-repo intermediate is
-    * pinned via pinOnce/materializeRetiring (always counted), so a
-    * warm-but-unmaterialized intermediate cannot occur here.
-    */
-  def materializeRetiringCounted(result: DataFrame,
+  def materializeRetiring(result: DataFrame,
       intermediate: DataFrame): (DataFrame, Long) = {
     if (result.storageLevel == StorageLevel.NONE) {
       pinOnce(intermediate)
@@ -69,7 +65,11 @@ object Caching {
   }
 
   /** Persist `df` unless its plan is already in the session's SQL cache
-    * (plan-keyed lookup via `Dataset.storageLevel`), then return it.
+    * (plan-keyed lookup via `Dataset.storageLevel`), then return it. The
+    * persist is lazy, so an `ensureCached` frame must never share a plan
+    * with a [[materializeRetiring]] intermediate: that method would find
+    * the plan cached, skip its counted pin, and let concurrent consumer
+    * stages race to populate the blocks.
     */
   def ensureCached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.persist() else df

@@ -2,12 +2,15 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.ExactMoments
+import graft.functions.ExactRatio.{DuckF, Flavor, SparkF}
 
 /** One-pass Pearson correlation matrix over k integer-valued columns —
   * the profiling/collinearity audit behind the `stats_corr_matrix` query,
   * exposed generically: any frame, any column count.
   *
-  * Exactness contract: the caller snaps measures to integers FIRST
+  * Exactness contract ([[graft.functions.ExactMoments]], shared with the
+  * other correlation keys): the caller snaps measures to integers FIRST
   * (cents, percent points, counts — the caller owns the units); every
   * moment is then an exact sum — per-row products in int64, accumulated
   * as DECIMAL(38,0) — so n²·covariance (the cross-multiplied integer
@@ -41,31 +44,38 @@ object CorrMatrix {
   def of(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, s"need >= 2 columns, got ${cols.size}")
     require(cols.distinct.size == cols.size, s"duplicate columns in $cols")
-    val k = cols.size
     val b = df.select(cols.zipWithIndex.map { case (c, i) =>
       col(c).cast("long").as(s"x${i + 1}") }: _*)
-    val sumCols = (1 to k).map(i =>
-        sum(expr(s"cast(x$i as decimal(38,0))")).as(s"s$i")) ++
-      (for (i <- 1 to k; j <- i to k)
-        yield sum(expr(s"cast(x$i * x$j as decimal(38,0))")).as(s"q${i}_$j"))
-    val aggs = count(lit(1)).as("n") +: sumCols
+    val aggs = ExactMoments.cols(sums(SparkF, cols.size))
     val m = b.agg(aggs.head, aggs.tail: _*)
-    def term(i: Int, j: Int) =
-      s"cast(n as decimal(38,0)) * q${i}_$j - s$i * s$j"
-    val pairs = for (i <- 1 to k; j <- (i + 1) to k) yield struct(
-      lit(cols(i - 1)).as("col_x"), lit(cols(j - 1)).as("col_y"),
-      col("n").as("n"),
-      expr(s"cast(${term(i, j)} as decimal(38,0))").as("cov_n2"),
-      expr(s"cast(${term(i, i)} as decimal(38,0))").as("vxx"),
-      expr(s"cast(${term(j, j)} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
-    val exploded = m.select(explode(array(pairs: _*)).as("p")).select("p.*")
-      .filter(col("vxx") > 0 && col("vyy") > 0)
-    ExactRatio.applySparkDomain(exploded,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "r2_e6"))
-      .withColumn("r_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
-      .select("col_x", "col_y", "n", "cov_m9", "r2_e6", "r_sign")
-      .orderBy("col_x", "col_y")
+    val ps = pairs(cols).map { case (i, j) => struct((Seq(lit(cols(i - 1)).as("col_x"),
+      lit(cols(j - 1)).as("col_y"), col("n").as("n")) ++
+      ExactMoments.cols(pairTerms(SparkF, i, j))): _*) }
+    ExactMoments.pearson(m.select(explode(array(ps: _*)).as("p")).select("p.*"),
+      Seq("col_x", "col_y"), "r2_e6", "r_sign")
   }
+
+  /** DuckDB twin of [[of]] over the relation `from` (SQL) with columns `cols`. */
+  def oracleSql(from: String, cols: Seq[String]): String = {
+    val branches = pairs(cols).map { case (i, j) =>
+      s"SELECT '${cols(i - 1)}' AS col_x, '${cols(j - 1)}' AS col_y, n," +
+        s" ${ExactMoments.selectList(pairTerms(DuckF, i, j))} FROM m"
+    }.mkString("\nUNION ALL ")
+    s"""WITH b AS (SELECT ${cols.zipWithIndex.map { case (c, i) =>
+         s"CAST($c AS BIGINT) AS x${i + 1}" }.mkString(", ")} FROM $from),
+       |m AS (SELECT ${ExactMoments.selectList(sums(DuckF, cols.size))} FROM b)
+       |${ExactMoments.pearsonDuck(branches, Seq("col_x", "col_y"), "r2_e6", "r_sign")}""".stripMargin
+  }
+
+  /** Unordered column pairs (i, j), 1-based, i < j, in `cols` order. */
+  private def pairs(cols: Seq[String]) =
+    for (i <- 1 to cols.size; j <- (i + 1) to cols.size) yield (i, j)
+
+  /** n, then Σx_i and Σx_i·x_j (j ≥ i) over columns x1..xk. */
+  private def sums(f: Flavor, k: Int): Seq[(String, String)] =
+    ("n" -> "count(*)") +: ((1 to k).map(i => s"s$i" -> ExactMoments.sum(f, s"x$i")) ++
+      (for (i <- 1 to k; j <- i to k) yield s"q${i}_$j" -> ExactMoments.sum(f, s"x$i", s"x$j")))
+
+  private def pairTerms(f: Flavor, i: Int, j: Int) =
+    ExactMoments.coTerms(f, s"s$i", s"s$j", s"q${i}_$j", s"q${i}_$i", s"q${j}_$j")
 }

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.ExactMoments
+import Sqlh.snap
 
 /** Round-12 corpus-preparation suite (SURVEY.md §2.13 extension): the four
   * document-level operations a training-data pipeline runs between raw
@@ -363,13 +365,6 @@ object Corpus {
     * after runs on ≤16 rows.
     */
   private val corpusHeaps = Q("corpus_heaps", {
-    import graft.functions.ExactRatio
-    val inner =
-      """SELECT n,
-        |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS num,
-        |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS den,
-        |  abs(CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS HUGEINT)) AS sl_a
-        |FROM m WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0""".stripMargin
     s"""WITH b AS (SELECT min(doc_id) AS lo, greatest(max(doc_id) - min(doc_id), 1) AS dl
        |  FROM documents),
        |db AS (SELECT least(CAST(16 AS BIGINT),
@@ -392,21 +387,12 @@ object Corpus {
        |    CAST(sum(coalesce(tc.nv, 0)) OVER (ORDER BY k) AS BIGINT) AS yk
        |  FROM sp LEFT JOIN dc ON dc.bk = sp.k LEFT JOIN tc ON tc.bk = sp.k),
        |sn AS (SELECT
-       |    CAST(floor(ln(CAST(xk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x,
-       |    CAST(floor(ln(CAST(yk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y
+       |    CAST(${snap("ln(CAST(xk AS DOUBLE))", 6)} AS BIGINT) AS x,
+       |    CAST(${snap("ln(CAST(yk AS DOUBLE))", 6)} AS BIGINT) AS y
        |  FROM cum WHERE xk >= 1 AND yk >= 1),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-       |    sum(CAST(x * y AS HUGEINT)) AS sxy,
-       |    sum(CAST(x * x AS HUGEINT)) AS sxx FROM sn)
-       |SELECT n,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "num")} AS num_m9,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "den")} AS den_m9,
-       |  CAST(${ExactRatio.signInt("num")} * sl_e6 AS BIGINT) AS beta_e6
-       |FROM ${ExactRatio.applyDuck(inner,
-          ExactRatio.ratE6Stages(ExactRatio.DuckF, "sl_a", "den", "sl_e6"))} q""".stripMargin
+       |m AS (SELECT ${ExactMoments.momentsDuck("x", "y", ExactMoments.Slope)} FROM sn)
+       |${ExactMoments.slopeDuck("m", "beta_e6")}""".stripMargin
   }) { (s, d) =>
-    import graft.functions.ExactRatio
     val docs = Tables.documents(s, d)
     // the 1-row bounds frame feeds BOTH bucketings — pinned so the doc-id
     // min/max scan runs once, not once per broadcast consumer (r17 scan
@@ -443,26 +429,10 @@ object Corpus {
       .withColumn("yk", sum("nv").over(w).cast("long"))
     val sn = cum.filter(col("xk") >= 1 && col("yk") >= 1)
       .select(
-        expr("cast(floor(ln(cast(xk as double)) * 1000000 + 0.5) as bigint)").as("x"),
-        expr("cast(floor(ln(cast(yk as double)) * 1000000 + 0.5) as bigint)").as("y"))
-    val m = sn.agg(count(lit(1)).as("n"),
-      sum(expr("cast(x as decimal(38,0))")).as("sx"),
-      sum(expr("cast(y as decimal(38,0))")).as("sy"),
-      sum(expr("cast(x * y as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(x * x as decimal(38,0))")).as("sxx"))
-    val base = m.filter(col("n") >= 2 &&
-        expr("cast(n as decimal(38,0)) * sxx - sx * sx > 0"))
-      .select(col("n"),
-        expr("cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))").as("num"),
-        expr("cast(cast(n as decimal(38,0)) * sxx - sx * sx as decimal(38,0))").as("den"),
-        expr(graft.functions.ExactRatio.safeAbs(graft.functions.ExactRatio.SparkF,
-          "cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))")).as("sl_a"))
-    ExactRatio.applySparkDomain(base,
-        ExactRatio.ratE6Stages(ExactRatio.SparkF, "sl_a", "den", "sl_e6"))
-      .select(col("n"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "num")).as("num_m9"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "den")).as("den_m9"),
-        expr(s"cast(${ExactRatio.signInt("num")} * sl_e6 as bigint)").as("beta_e6"))
+        expr(s"cast(${snap("ln(cast(xk as double))", 6)} as bigint)").as("x"),
+        expr(s"cast(${snap("ln(cast(yk as double))", 6)} as bigint)").as("y"))
+    ExactMoments.slope(ExactMoments.moments(sn.groupBy(), "x", "y", ExactMoments.Slope),
+      "beta_e6")
   }
 
   /** Top-100 trigram coverage: what fraction of all trigram OCCURRENCES

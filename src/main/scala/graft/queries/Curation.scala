@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactMoments
+import Sqlh.snap
 
 /** Round-8 data-curation / pipeline-analytics suite (SURVEY.md §2.13).
   *
@@ -232,10 +234,7 @@ object Curation {
        |  FROM toks GROUP BY lang, tok),
        |nd AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang)
        |SELECT tf.lang AS lang, tok, tf, df,
-       |  CAST(floor(CAST(tf AS DOUBLE)
-       |    * ln((CAST(n_docs AS DOUBLE) + CAST(1 AS DOUBLE))
-       |          / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))
-       |    * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS tfidf_e6
+       |  CAST(${snap("CAST(tf AS DOUBLE) * ln((CAST(n_docs AS DOUBLE) + CAST(1 AS DOUBLE)) / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))", 6)} AS BIGINT) AS tfidf_e6
        |FROM tf JOIN nd ON tf.lang = nd.lang
        |ORDER BY tfidf_e6 DESC, lang, tok LIMIT 100""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
@@ -246,7 +245,7 @@ object Curation {
     val nd = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     tf.join(broadcast(nd), "lang")
       .withColumn("tfidf_e6", expr(
-        "cast(floor(cast(tf as double) * ln((cast(n_docs as double) + 1.0d) / (cast(df as double) + 1.0d)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("cast(tf as double) * ln((cast(n_docs as double) + 1.0d) / (cast(df as double) + 1.0d))", 6)} as bigint)"))
       .select("lang", "tok", "tf", "df", "tfidf_e6")
       .orderBy(col("tfidf_e6").desc, col("lang"), col("tok"))
       .limit(100)
@@ -589,8 +588,7 @@ object Curation {
        |t AS (SELECT prev, CAST(sum(n) AS BIGINT) AS tot,
        |    CAST(count(*) AS BIGINT) AS n_next FROM c GROUP BY prev),
        |lp AS (SELECT c.prev, c.n,
-       |    CAST(floor(ln(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lp_e6
+       |    CAST(${snap("ln(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE))", 6)} AS BIGINT) AS lp_e6
        |  FROM c JOIN t ON c.prev = t.prev)
        |SELECT t.prev, t.n_next, t.tot,
        |  CAST((-sum(CAST(lp.n AS HUGEINT) * lp.lp_e6)) // t.tot AS BIGINT) AS h_e6
@@ -607,7 +605,7 @@ object Curation {
       .agg(sum("n").as("tot"), count(lit(1)).as("n_next"))
     c.join(broadcast(t), "prev")
       .withColumn("lp_e6", expr(
-        "cast(floor(ln(cast(n as double) / cast(tot as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(n as double) / cast(tot as double))", 6)} as bigint)"))
       // decimal-before-multiply (the col_entropy overflow note): n ~1e12
       // × lp_e6 ~4e7 wraps int64; DECIMAL(38,0) stays exact
       .groupBy("prev", "n_next", "tot")
@@ -684,7 +682,7 @@ object Curation {
     */
   private val mlScore = Q("ml_score",
     s"""WITH q AS (SELECT vec_id, $foldSql AS fold,
-       |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv
+       |    list_transform(embedding, x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
        |  FROM embeddings),
        |t AS (SELECT vec_id, fold, qv,
        |    CASE WHEN qv[1] > 0 THEN 1 ELSE 0 END AS target FROM q),
@@ -704,7 +702,7 @@ object Curation {
        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin) { (s, d) =>
     val q = graft.Caching.ensureCached(Tables.embeddings(s, d).select(
       col("vec_id"), expr(foldExpr).as("fold"),
-      expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000000 + 0.5) as bigint))")
+      expr(s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
         .as("qv"))
       .withColumn("target", expr("case when element_at(qv, 1) > 0 then 1 else 0 end")))
     val cl = q.filter(col("fold") =!= 0)
@@ -758,25 +756,11 @@ object Curation {
        |rk AS (SELECT tf,
        |    CAST(row_number() OVER (ORDER BY tf DESC, tok) AS BIGINT) AS r FROM top),
        |sn AS (SELECT
-       |    CAST(floor(ln(CAST(r AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x,
-       |    CAST(floor(ln(CAST(tf AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y
+       |    CAST(${snap("ln(CAST(r AS DOUBLE))", 6)} AS BIGINT) AS x,
+       |    CAST(${snap("ln(CAST(tf AS DOUBLE))", 6)} AS BIGINT) AS y
        |  FROM rk),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-       |    sum(CAST(x * y AS HUGEINT)) AS sxy,
-       |    sum(CAST(x * x AS HUGEINT)) AS sxx FROM sn)
-       |SELECT n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "num")} AS num_m9,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "den")} AS den_m9,
-       |  CAST(${graft.functions.ExactRatio.signInt("num")} * sl_e6 AS BIGINT) AS slope_e6
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS num,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS den,
-          |  abs(CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS HUGEINT)) AS sl_a
-          |FROM m WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0""".stripMargin,
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "sl_a", "den", "sl_e6"))} q""".stripMargin) { (s, d) =>
+       |m AS (SELECT ${ExactMoments.momentsDuck("x", "y", ExactMoments.Slope)} FROM sn)
+       |${ExactMoments.slopeDuck("m", "slope_e6")}""".stripMargin) { (s, d) =>
     val tf = Tables.documents(s, d)
       .select(explode(split(lower(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")
@@ -787,27 +771,10 @@ object Curation {
     val rk = top.withColumn("r",
       row_number().over(Window.orderBy(col("tf").desc, col("tok"))).cast("bigint"))
     val sn = rk.select(
-      expr("cast(floor(ln(cast(r as double)) * 1000000 + 0.5) as bigint)").as("x"),
-      expr("cast(floor(ln(cast(tf as double)) * 1000000 + 0.5) as bigint)").as("y"))
-    val m = sn.agg(count(lit(1)).as("n"),
-      sum(expr("cast(x as decimal(38,0))")).as("sx"),
-      sum(expr("cast(y as decimal(38,0))")).as("sy"),
-      sum(expr("cast(x * y as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(x * x as decimal(38,0))")).as("sxx"))
-    import graft.functions.ExactRatio
-    val base = m.filter(col("n") >= 2 &&
-        expr("cast(n as decimal(38,0)) * sxx - sx * sx > 0"))
-      .select(col("n"),
-        expr("cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))").as("num"),
-        expr("cast(cast(n as decimal(38,0)) * sxx - sx * sx as decimal(38,0))").as("den"),
-        expr(graft.functions.ExactRatio.safeAbs(graft.functions.ExactRatio.SparkF,
-          "cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))")).as("sl_a"))
-    ExactRatio.applySparkDomain(base,
-        ExactRatio.ratE6Stages(ExactRatio.SparkF, "sl_a", "den", "sl_e6"))
-      .select(col("n"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "num")).as("num_m9"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "den")).as("den_m9"),
-        expr(s"cast(${ExactRatio.signInt("num")} * sl_e6 as bigint)").as("slope_e6"))
+      expr(s"cast(${snap("ln(cast(r as double))", 6)} as bigint)").as("x"),
+      expr(s"cast(${snap("ln(cast(tf as double))", 6)} as bigint)").as("y"))
+    ExactMoments.slope(ExactMoments.moments(sn.groupBy(), "x", "y", ExactMoments.Slope),
+      "slope_e6")
   }
 
   /** Data-quality expectation audit — the rule table a pipeline publishes
@@ -828,7 +795,7 @@ object Curation {
     s"""WITH li AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |    CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50
        |      THEN 1 ELSE 0 END) AS BIGINT) AS v_qty,
-       |    CAST(sum(CASE WHEN CAST(floor(l_discount * 100 + 0.5) AS BIGINT)
+       |    CAST(sum(CASE WHEN CAST(${snap("l_discount", 2)} AS BIGINT)
        |      NOT BETWEEN 0 AND 10 THEN 1 ELSE 0 END) AS BIGINT) AS v_disc,
        |    CAST(sum(CASE WHEN l_extendedprice <= 0
        |      THEN 1 ELSE 0 END) AS BIGINT) AS v_price
@@ -855,7 +822,7 @@ object Curation {
       .agg(count(lit(1)).as("n"),
         sum(when(expr("l_quantity < 1 or l_quantity > 50"), 1L)
           .otherwise(0L)).as("v_qty"),
-        sum(when(expr("cast(floor(l_discount * 100 + 0.5) as bigint)" +
+        sum(when(expr(s"cast(${snap("l_discount", 2)} as bigint)" +
           " not between 0 and 10"), 1L).otherwise(0L)).as("v_disc"),
         sum(when(expr("l_extendedprice <= 0"), 1L).otherwise(0L))
           .as("v_price"))
@@ -903,13 +870,13 @@ private[queries] object Bm25 {
     s"size(filter(split(lower(text), ' '), x -> x = '${terms(i - 1)}')) AS tf$i"
   // one term's BM25 contribution; identical text on both engines except
   // the double-literal spelling (DuckDB parses bare decimals as DECIMAL)
-  private def term(i: Int, c: String => String) =
+  private def contrib(i: Int, c: String => String) =
     s"""ln(${c("1")} + (cast(n_docs as double) - cast(df$i as double) + ${c("0.5")})
        |  / (cast(df$i as double) + ${c("0.5")}))
        |* (cast(tf$i as double) * ${c("2.2")})
        |/ (cast(tf$i as double) + ${c("1.2")} * (${c("0.25")} + ${c("0.75")} * cast(dl as double) / avgdl))""".stripMargin
   private def score(c: String => String) =
-    s"cast(floor((${term(1, c)} + ${term(2, c)} + ${term(3, c)}) * ${c("1000000")} + ${c("0.5")}) as bigint)"
+    s"cast(${snap(s"${contrib(1, c)} + ${contrib(2, c)} + ${contrib(3, c)}", 6)} as bigint)"
   private val duck: String => String = k => s"CAST($k AS DOUBLE)"
   private val spark: String => String = k => s"${k}d"
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import Sqlh.snap
 
 /** Feature-engineering and linkage suite: the per-entity rolling features,
   * embedding-space audits, conditional language-model scores and dirty-
@@ -26,7 +27,7 @@ object Features {
     */
   private val eventsRolling = Q("events_rolling",
     s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events)
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events)
        |SELECT event_id, user_id,
        |  count(*) OVER w AS n_1h,
        |  CAST(sum(vc) OVER w AS DOUBLE) / 100 AS v_1h
@@ -38,7 +39,7 @@ object Features {
       .rangeBetween(-3600000000L, 0)
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("ts_us"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .withColumn("n_1h", count(lit(1)).over(w))
       .withColumn("v_1h", sum("vc").over(w).cast("double") / 100)
       .select("event_id", "user_id", "n_1h", "v_1h")
@@ -60,7 +61,7 @@ object Features {
     s"""WITH raw AS (SELECT vec_id, label, unnest(embedding) AS v,
        |    generate_subscripts(embedding, 1) AS pos FROM embeddings),
        |el AS (SELECT vec_id, label, pos,
-       |    CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS ve FROM raw),
+       |    CAST(${snap("CAST(v AS DOUBLE)", 6)} AS BIGINT) AS ve FROM raw),
        |cent AS (SELECT label, pos, sum(ve) AS s_e6, count(*) AS n
        |  FROM el GROUP BY label, pos),
        |dist AS (SELECT el.vec_id, el.label,
@@ -75,7 +76,7 @@ object Features {
     val el = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), posexplode(col("embedding")))
       .select(col("vec_id"), col("label"), col("pos"),
-        expr("cast(floor(cast(col as double) * 1000000 + 0.5) as bigint)").as("ve"))
+        expr(s"cast(${snap("cast(col as double)", 6)} as bigint)").as("ve"))
     val cent = el.groupBy("label", "pos")
       .agg(sum("ve").as("s_e6"), count(lit(1)).as("n"))
     // per-term product fits BIGINT (≤ ~6e16); the per-vector and
@@ -113,8 +114,7 @@ object Features {
        |bc AS (SELECT lang, w1, w2, count(*) AS cb FROM bg GROUP BY lang, w1, w2),
        |fc AS (SELECT lang, w1, sum(cb) AS cf FROM bc GROUP BY lang, w1),
        |lp AS (SELECT bc.lang, bc.w1, bc.w2,
-       |    CAST(floor(ln(CAST(cb AS DOUBLE) / CAST(cf AS DOUBLE))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lp_e6
+       |    CAST(${snap("ln(CAST(cb AS DOUBLE) / CAST(cf AS DOUBLE))", 6)} AS BIGINT) AS lp_e6
        |  FROM bc JOIN fc ON bc.lang = fc.lang AND bc.w1 = fc.w1)
        |SELECT bg.doc_id, count(*) AS n_bg,
        |  CAST(sum(lp_e6) AS BIGINT) AS logp_sum_e6,
@@ -142,7 +142,7 @@ object Features {
     val lp = bc
       .withColumn("cf", sum("cb").over(Window.partitionBy("lang", "w1")))
       .withColumn("lp_e6", expr(
-        "cast(floor(ln(cast(cb as double) / cast(cf as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(cb as double) / cast(cf as double))", 6)} as bigint)"))
       .select("lang", "w1", "w2", "lp_e6")
     bg.join(broadcast(lp), Seq("lang", "w1", "w2"))
       .groupBy("doc_id")
@@ -269,7 +269,7 @@ object Features {
     */
   private val scaleMinmax = Q("scale_minmax",
     s"""WITH e AS (SELECT event_id, event_type,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |st AS (SELECT event_type, min(vc) AS lo, max(vc) AS hi
        |  FROM e GROUP BY event_type)
        |SELECT event_id, e.event_type,
@@ -278,7 +278,7 @@ object Features {
        |FROM e JOIN st ON e.event_type = st.event_type
        |ORDER BY event_id""".stripMargin) { (s, d) =>
     val e = Tables.events(s, d).select(col("event_id"), col("event_type"),
-      expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+      expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
     val st = e.groupBy("event_type").agg(min("vc").as("lo"), max("vc").as("hi"))
     e.join(broadcast(st), "event_type")
       .select(col("event_id"), col("event_type"),
@@ -302,13 +302,13 @@ object Features {
     s"""SELECT event_type,
        |  CAST((epoch_us(ts) // 3600000000) % 24 AS INTEGER) AS hour_utc,
        |  count(*) AS n,
-       |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100 AS v_sum
+       |  CAST(sum(CAST(${snap("value", 2)} AS BIGINT)) AS DOUBLE) / 100 AS v_sum
        |FROM events GROUP BY event_type, hour_utc
        |ORDER BY event_type, hour_utc""".stripMargin) { (s, d) =>
     Tables.events(s, d)
       .select(col("event_type"),
         expr("cast((ts_us div 3600000000) % 24 as int)").as("hour_utc"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .groupBy("event_type", "hour_utc")
       .agg(count(lit(1)).as("n"),
         expr("cast(sum(vc) as double) / 100").as("v_sum"))
@@ -327,7 +327,7 @@ object Features {
     */
   private val featureCdf = Q("feature_cdf",
     s"""WITH e AS (SELECT event_id, event_type,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |vcnt AS (SELECT event_type, vc, count(*) AS c FROM e
        |  GROUP BY event_type, vc),
        |cdf AS (SELECT event_type, vc,
@@ -340,7 +340,7 @@ object Features {
        |FROM e JOIN cdf ON e.event_type = cdf.event_type AND e.vc = cdf.vc
        |ORDER BY event_id""".stripMargin) { (s, d) =>
     val e = Tables.events(s, d).select(col("event_id"), col("event_type"),
-      expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+      expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
     val vcnt = e.groupBy("event_type", "vc").agg(count(lit(1)).as("c"))
     val wOrd = Window.partitionBy("event_type").orderBy("vc")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -368,7 +368,7 @@ object Features {
     */
   private val eventsTwa = Q("events_twa",
     s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |held AS (SELECT user_id, vc, ts_us, event_id,
        |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS nxt
        |  FROM e)
@@ -381,7 +381,7 @@ object Features {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     Tables.events(s, d)
       .select(col("user_id"), col("ts_us"), col("event_id"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .withColumn("nxt", lead("ts_us", 1).over(w))
       .filter(col("nxt").isNotNull)
       .groupBy("user_id")
@@ -472,7 +472,7 @@ object Features {
     */
   private val revenueGini = Q("revenue_gini",
     s"""WITH cr AS (SELECT c_nationkey AS nat, o_custkey,
-       |    sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS x
+       |    sum(CAST(${snap("o_totalprice", 2)} AS BIGINT)) AS x
        |  FROM orders JOIN customer ON o_custkey = c_custkey
        |  GROUP BY c_nationkey, o_custkey),
        |r AS (SELECT nat, x,
@@ -491,7 +491,7 @@ object Features {
       .join(broadcast(Tables.customer(s, d).select("c_custkey", "c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nat"), col("o_custkey"))
-      .agg(sum(expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)")).as("x"))
+      .agg(sum(expr(s"cast(${snap("o_totalprice", 2)} as bigint)")).as("x"))
     cr.withColumn("i", row_number().over(
         Window.partitionBy("nat").orderBy("x", "o_custkey")))
       .groupBy("nat")
@@ -608,7 +608,7 @@ object Features {
     s"""WITH e AS (SELECT event_type,
        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day_idx,
        |    epoch_us(ts) AS ts_us, event_id,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |r AS (SELECT event_type, day_idx, vc,
        |    row_number() OVER (PARTITION BY event_type, day_idx
        |      ORDER BY ts_us, event_id) AS rn_a,
@@ -629,7 +629,7 @@ object Features {
       .select(col("event_type"),
         expr("cast(ts_us div 86400000000 as bigint)").as("day_idx"),
         col("ts_us"), col("event_id"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .withColumn("rn_a", row_number().over(wa))
       .withColumn("rn_d", row_number().over(wd))
       .groupBy("event_type", "day_idx")
@@ -655,7 +655,7 @@ object Features {
   private val resampleFfill = Q("resample_ffill",
     s"""WITH hourly AS (SELECT event_type,
        |    CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS hr,
-       |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS v
+       |    CAST(sum(CAST(${snap("value", 2)} AS BIGINT)) AS BIGINT) AS v
        |  FROM events GROUP BY event_type, hr),
        |b AS (SELECT CAST(min(hr) AS BIGINT) AS lo, CAST(max(hr) AS BIGINT) AS hi
        |  FROM hourly),
@@ -672,7 +672,7 @@ object Features {
     val hourly = graft.Caching.ensureCached(Tables.events(s, d)
       .select(col("event_type"),
         expr("cast(ts_us div 3600000000 as bigint)").as("hr"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .groupBy("event_type", "hr").agg(sum("vc").as("v")))
     val b = hourly.agg(min("hr").as("lo"), max("hr").as("hi"))
     val dom = hourly.select("event_type").distinct()
@@ -699,7 +699,7 @@ object Features {
     */
   private val embeddingProject = Q("embedding_project",
     s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv
+       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
        |  FROM embeddings),
        |p AS (SELECT vec_id,
        |  list_transform(generate_series(0, 7), i ->
@@ -730,7 +730,7 @@ object Features {
     // pin the vector. The intermediate stays a real array column.
     Tables.embeddings(s, d)
       .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(floor(cast(x as double) * 1000000 + 0.5) as bigint))")
+        s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
         .as("qv"))
       .select(col("vec_id"), expr(projExpr).as("proj"))
       .select(col("vec_id"),
@@ -821,10 +821,7 @@ object Features {
        |  GROUP BY c, p),
        |dfs AS (SELECT p, CAST(count(*) AS BIGINT) AS df FROM cp GROUP BY p),
        |nc AS (SELECT CAST(count(DISTINCT c) AS BIGINT) AS n FROM cp),
-       |w AS (SELECT c, cp.p, CAST(cp.tf * CAST(floor(
-       |      ln((CAST(n AS DOUBLE) + CAST(1 AS DOUBLE))
-       |        / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))
-       |      * CAST(100000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)
+       |w AS (SELECT c, cp.p, CAST(cp.tf * CAST(${snap("ln((CAST(n AS DOUBLE) + CAST(1 AS DOUBLE)) / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))", 5)} AS BIGINT)
        |    AS BIGINT) AS w
        |  FROM cp JOIN dfs ON dfs.p = cp.p CROSS JOIN nc
        |  WHERE df BETWEEN 2 AND 20),
@@ -885,8 +882,8 @@ object Features {
       .filter(size(col("l")).between(2, 20))
       .crossJoin(broadcast(nc))
       .withColumn("idf", expr(
-        "cast(floor(ln((cast(n as double) + 1.0d) / (cast(size(l) as double) + 1.0d))" +
-          " * 100000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln((cast(n as double) + 1.0d) / (cast(size(l) as double) + 1.0d))", 5)}" +
+          " as bigint)"))
       .select(expr(
         "transform(l, e -> struct(e.c as c, cast(e.tf * idf as bigint) as w))").as("lw"))
     val pairExpr =
@@ -941,7 +938,7 @@ object Features {
     * state is one exact BigDecimal per partition. */
   private val partsAbc = Q("parts_abc",
     s"""WITH pr AS (SELECT l_partkey AS pk,
-       |    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+       |    CAST(sum(CAST(${snap("l_extendedprice", 2)} AS BIGINT))
        |      AS DECIMAL(38,0)) AS r
        |  FROM lineitem GROUP BY l_partkey),
        |w AS (SELECT pk, r,
@@ -958,7 +955,7 @@ object Features {
        |FROM c GROUP BY cls ORDER BY cls""".stripMargin) { (s, d) =>
     val pr = Tables.lineitem(s, d)
       .groupBy(col("l_partkey").as("pk"))
-      .agg(sum(expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)"))
+      .agg(sum(expr(s"cast(${snap("l_extendedprice", 2)} as bigint)"))
         .cast("decimal(38,0)").as("r"))
     val (w, total) = graft.operators.RangePrefixSum.withRunningSum(
       pr, Seq(col("r").desc, col("pk")), "r", "cum")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.multimodal.Multimodal
+import Sqlh.snap
 
 /** SURVEY.md §2.13 (north-star `[N]`) — the large-scale training-data
   * pipeline suite beyond the reference's own surface: deduplication
@@ -156,10 +157,10 @@ object LlmOps {
     // (pair generator + skew guard factored into jaccardPairs below)
     Q("dedup_ngram_jaccard",
       s"""WITH $jaccardCte
-         |SELECT da, db, CAST(floor(jac * 1000 + 0.5) AS BIGINT) AS jac_e3 FROM jpairs
+         |SELECT da, db, CAST(${snap("jac", 3)} AS BIGINT) AS jac_e3 FROM jpairs
          |ORDER BY da, db""".stripMargin) { (s, d) =>
       jaccardPairs(s, d)
-        .select(col("da"), col("db"), expr("cast(floor(jac * 1000 + 0.5) as bigint)").as("jac_e3"))
+        .select(col("da"), col("db"), expr(s"cast(${snap("jac", 3)} as bigint)").as("jac_e3"))
         .orderBy("da", "db")
     },
 
@@ -208,10 +209,10 @@ object LlmOps {
     // on every fixture pair, so the edge SET matches by construction.
     Q("dedup_embedding",
       s"""WITH ${TextSim.cosineEdgesCte(TextSim.DedupCosineBound, TextSim.DedupCosineThrSql)}
-         |SELECT a_id, b_id, CAST(floor(sim * 1000 + 0.5) AS BIGINT) AS sim_e3
+         |SELECT a_id, b_id, CAST(${snap("sim", 3)} AS BIGINT) AS sim_e3
          |FROM ep ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
       TextSim.cosineEdges(s, d, TextSim.DedupCosineBound, TextSim.DedupCosineThr)
-        .select(col("a_id"), col("b_id"), expr("cast(floor(sim * 1000 + 0.5) as bigint)").as("sim_e3"))
+        .select(col("a_id"), col("b_id"), expr(s"cast(${snap("sim", 3)} as bigint)").as("sim_e3"))
         .orderBy("a_id", "b_id")
     },
 
@@ -322,14 +323,14 @@ object LlmOps {
          |    row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rnk
          |  FROM sims)
          |SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk,
-         |  CAST(floor(sim * 1000 + 0.5) AS BIGINT) AS sim_e3
+         |  CAST(${snap("sim", 3)} AS BIGINT) AS sim_e3
          |FROM r WHERE rnk <= 3 ORDER BY vec_id, rnk""".stripMargin) { (s, d) =>
       val w = Window.partitionBy("a_id").orderBy(col("sim").desc, col("b_id"))
       lshCandidates(s, d, probeLimit = 50)
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 3)
         .select(col("a_id").as("vec_id"), col("b_id").as("neighbor_id"),
-          col("rnk"), expr("cast(floor(sim * 1000 + 0.5) as bigint)").as("sim_e3"))
+          col("rnk"), expr(s"cast(${snap("sim", 3)} as bigint)").as("sim_e3"))
         .orderBy("vec_id", "rnk")
     },
 
@@ -417,7 +418,7 @@ object LlmOps {
       })
       val assigned = TextSim.withVecNorm(
         e.select(col("vec_id"), col("embedding"),
-          expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000000 + 0.5) as bigint))").as("qv"),
+          expr(s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))").as("qv"),
           assignU(col("embedding")).as("cluster")), "v")
       // per-probe: the 3 nearest centroids by EXACT integer d2 (r12 —
       // was cosine in doubles; integer ranking removes the one ulp-rank
@@ -443,7 +444,7 @@ object LlmOps {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 3)
         .select(col("a_id").as("vec_id"), col("b_id").as("neighbor_id"),
-          col("rnk"), expr("cast(floor(sim * 1000 + 0.5) as bigint)").as("sim_e3"))
+          col("rnk"), expr(s"cast(${snap("sim", 3)} as bigint)").as("sim_e3"))
         .orderBy("vec_id", "rnk")
     },
 
@@ -642,21 +643,23 @@ object LlmOps {
     // sample; this one never leaves the cluster). Everything runs in
     // exact ×10⁶-quantized integer space so all three rounds are
     // bit-identical cross-engine: distances are BIGINT sums of squared
-    // integer gaps, assignment is min(struct(d2, c)) — a COMBINABLE
-    // argmin aggregate, no per-vector window — with the (distance, id)
-    // tie-break explicit, and centroid updates are truncating integer
-    // means (`div`/`//` both truncate toward zero). Seeds = the 4
-    // lowest-vec_id vectors (TakeOrdered, deterministic). Per round: one
-    // broadcast of the k×d centroid table + one shuffle of |V|·k skinny
-    // distance rows + one co-keyed join back — O(rounds) stages, no
-    // driver-side data. Output: per-cluster size, exact-decimal inertia
-    // (to the round-2 centroids vectors were assigned against), and the
-    // round-3 centroid component checksum.
+    // integer gaps, and centroid updates are truncating integer means
+    // (`div`/`//` both truncate toward zero). Seeds = the 4 lowest-vec_id
+    // vectors (TakeOrdered, deterministic). The k×d centroids live on the
+    // driver between rounds and are inlined into each round's plan as
+    // literals, so assignment is a MAP-SIDE `array_min` over the k
+    // struct(d2, c) terms — the lexicographic argmin with the (distance,
+    // id) tie-break explicit, no join, no broadcast, no per-vector window.
+    // Per round: one exchange for the (c, pos) centroid mean and one
+    // collect of the k×d result — O(rounds) stages, no driver-side data.
+    // Output: per-cluster size, exact-decimal inertia (to the round-2
+    // centroids vectors were assigned against), and the round-3 centroid
+    // component checksum. An empty corpus yields zero rows.
     Q("kmeans_iter", kmeansOracle) { (s, d) =>
       import s.implicits._
       val v = graft.Caching.ensureCached(Tables.embeddings(s, d)
         .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(floor(cast(x as double) * 1000000 + 0.5) as bigint))")
+          s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
           .as("qv")))
       // The model state (k×d = 256 longs) lives on the driver between
       // rounds — model size, not data size (the broadcast-equivalent
@@ -667,32 +670,25 @@ object LlmOps {
       var cent: Seq[(Long, Seq[Long])] = v.orderBy("vec_id").limit(4)
         .collect().toSeq.sortBy(_.getLong(0)).zipWithIndex
         .map { case (r, i) => (i.toLong, r.getSeq[Long](1)) }
-      // r22 (VERDICT r21 item 4, guide §2.4): the assignment used to
-      // crossJoin(broadcast(cent)) into |V|·k distance rows reduced by a
-      // groupBy(vec_id) argmin — one broadcast-build job plus a |V|·k
-      // exchange per round, and the centroid update then JOINED the
-      // assignment back to v (another exchange). The centroids are
-      // driver literals already, so the argmin needs no join and no
-      // shuffle at all: array_min over the k inline struct(d2, c) terms
-      // is the same lexicographic min(struct(d2, c)) — identical
-      // exact-integer distance arithmetic (same zip_with/aggregate
-      // fold), identical (d2, c) tie-break — evaluated map-side per
-      // vector. The assignment carries qv forward, so the update
-      // aggregates straight off it instead of re-joining v. Per round:
-      // 3 exchanges + broadcast build -> 1 exchange ((c, pos) mean).
-      // Jobs (tools/actioncount, local[32]/sf0.1): build 17 -> 4,
-      // run 5 -> 3; isolated timekey 2.55 -> 1.36 s (MlSpec re-derives
-      // the fit bit-exactly; oracle hash green at 3 SFs).
-      def assignAgainst(c: Seq[(Long, Seq[Long])]) = {
-        val structs = c.map { case (ci, cv) =>
-          val arr = cv.mkString("array(", "L,", "L)")
-          s"struct(aggregate(zip_with(qv, $arr, (a, b) -> (a - b) * (a - b)), " +
-            s"cast(0 as bigint), (acc, x) -> acc + x) AS d2, ${ci}L AS c)"
-        }.mkString(",")
-        v.select(col("vec_id"), col("qv"),
-            expr(s"array_min(array($structs))").as("m"))
-          .select(col("vec_id"), col("qv"), col("m.c").as("c"), col("m.d2").as("d2"))
-      }
+      // Jobs at the JobsSpec config (sf0.001, local[4]): build 8, run 5,
+      // pinned there. tools/actioncount runs at sf0.1/local[32], where AQE
+      // plans other stage jobs, so its counts are not comparable.
+      def assignAgainst(c: Seq[(Long, Seq[Long])]) =
+        // no centroids (empty corpus, or every vector empty): nothing to
+        // assign, and `array_min(array())` would not analyze
+        if (c.isEmpty) v.select(col("vec_id"), col("qv"), lit(0L).as("c"), lit(0L).as("d2"))
+          .where(lit(false))
+        else {
+          val structs = c.map { case (ci, cv) =>
+            val arr = if (cv.isEmpty) "cast(array() as array<bigint>)"
+              else cv.map(x => s"${x}L").mkString("array(", ",", ")")
+            s"struct(aggregate(zip_with(qv, $arr, (a, b) -> (a - b) * (a - b)), " +
+              s"cast(0 as bigint), (acc, x) -> acc + x) AS d2, ${ci}L AS c)"
+          }.mkString(",")
+          v.select(col("vec_id"), col("qv"),
+              expr(s"array_min(array($structs))").as("m"))
+            .select(col("vec_id"), col("qv"), col("m.c").as("c"), col("m.d2").as("d2"))
+        }
       var asgn: org.apache.spark.sql.DataFrame = null
       for (k <- 1 to kmeansRounds) {
         asgn = assignAgainst(cent)
@@ -1042,7 +1038,7 @@ object LlmOps {
          |cent$k AS (SELECT c, list(cve ORDER BY pos) AS cv FROM cl$k GROUP BY c)""".stripMargin
     }.mkString(",\n")
     s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv
+       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
        |  FROM embeddings),
        |u AS (SELECT vec_id, unnest(qv) AS x, generate_subscripts(qv, 1) AS pos FROM v),
        |cent0 AS (SELECT CAST(rn - 1 AS BIGINT) AS c, qv AS cv
@@ -1099,7 +1095,7 @@ object LlmOps {
          |    ON n.sub = p.sub AND n.c = p.c)""".stripMargin
     }.mkString(",\n")
     s"""v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv
+       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
        |  FROM embeddings),
        |subv AS (SELECT vec_id, sub,
        |    qv[sub * $pqSubDim + 1 : sub * $pqSubDim + $pqSubDim] AS sv
@@ -1420,7 +1416,7 @@ object LlmOps {
          |    ON n.c = p.c)""".stripMargin
     }.mkString(",\n")
     s"""WITH v AS (SELECT vec_id, embedding,
-       |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv,
+       |    list_transform(embedding, x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv,
        |    CAST(CAST(vec_id AS DECIMAL(19,0)) * 2654435761 % 4294967296 AS BIGINT) AS hs
        |  FROM embeddings),
        |samp AS (SELECT vec_id, qv, row_number() OVER (ORDER BY hs, vec_id) AS rn
@@ -1446,7 +1442,7 @@ object LlmOps {
        |r AS (SELECT a_id, b_id, sim,
        |    row_number() OVER (PARTITION BY a_id ORDER BY sim DESC, b_id) AS rnk FROM sims)
        |SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk,
-       |  CAST(floor(sim * 1000 + 0.5) AS BIGINT) AS sim_e3
+       |  CAST(${snap("sim", 3)} AS BIGINT) AS sim_e3
        |FROM r WHERE rnk <= 3 ORDER BY vec_id, rnk""".stripMargin
   }
 
@@ -1572,6 +1568,6 @@ object LlmOps {
     // warm re-entry (graph_degree then dedup_ngram_jaccard in one session
     // builds the IDENTICAL plan) touches nothing; the RETURNED jp is the
     // caller's to retire (graft.Caching ownership contract)
-    graft.Caching.materializeRetiringCounted(jp, grams)
+    graft.Caching.materializeRetiring(jp, grams)
   }
 }

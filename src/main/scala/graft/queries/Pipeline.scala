@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
-import Sqlh.{dsum, dsumSpark, revenue}
+import graft.functions.ExactMoments
+import Sqlh.{dsum, dsumSpark, revenue, snap}
 
 /** Round-9 pipeline-analytics suite (SURVEY.md §2.13): the remaining
   * operations a production training-data pipeline runs between ingest and
@@ -241,7 +242,7 @@ object Pipeline {
     */
   private val paretoFrontier = Q("pareto_frontier",
     s"""WITH p AS (SELECT p_partkey, p_retailprice, p_size,
-       |    CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS pc,
+       |    CAST(${snap("p_retailprice", 2)} AS BIGINT) AS pc,
        |    CAST(p_size AS BIGINT) AS sz
        |  FROM part),
        |pp AS (SELECT pc, max(sz) AS m1 FROM p GROUP BY pc),
@@ -252,7 +253,7 @@ object Pipeline {
        |WHERE p.sz = st.m1 AND (st.m2 IS NULL OR p.sz > st.m2)
        |ORDER BY p.p_retailprice, p.p_size, p.p_partkey""".stripMargin) { (s, d) =>
     val p = Tables.part(s, d).select(col("p_partkey"), col("p_retailprice"), col("p_size"),
-      expr("cast(floor(p_retailprice * 100 + 0.5) as bigint)").as("pc"),
+      expr(s"cast(${snap("p_retailprice", 2)} as bigint)").as("pc"),
       col("p_size").cast("long").as("sz"))
     val perPrice = p.groupBy("pc").agg(max("sz").as("m1"))
     val st = perPrice.withColumn("m2",
@@ -509,17 +510,13 @@ object Pipeline {
     * both engines (the events_zscore discipline). One map-side-combinable
     * aggregate; the formula runs on a |groups|-row table.
     */
+  private val regressionMoments = Seq("sx", "sy", "sxx", "syy", "sxy")
   private val statsRegression = Q("stats_regression", {
     val moments =
-      """SELECT l_returnflag, count(*) AS n,
-        |    sum(CAST(qi AS DECIMAL(38,0))) AS sx,
-        |    sum(CAST(pi AS DECIMAL(38,0))) AS sy,
-        |    sum(CAST(qi * qi AS DECIMAL(38,0))) AS sxx,
-        |    sum(CAST(pi * pi AS DECIMAL(38,0))) AS syy,
-        |    sum(CAST(qi * pi AS DECIMAL(38,0))) AS sxy
+      s"""SELECT l_returnflag, ${ExactMoments.momentsDuck("qi", "pi", regressionMoments)}
         |  FROM (SELECT l_returnflag,
-        |      CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qi,
-        |      CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS pi
+        |      CAST(${snap("l_quantity", 2)} AS BIGINT) AS qi,
+        |      CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS pi
         |    FROM lineitem) t
         |  GROUP BY l_returnflag""".stripMargin
     s"""WITH m AS ($moments)
@@ -538,17 +535,11 @@ object Pipeline {
        |    AS intercept
        |FROM m ORDER BY l_returnflag""".stripMargin
   }) { (s, d) =>
-    val m = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
       .select(col("l_returnflag"),
-        expr("cast(floor(l_quantity * 100 + 0.5) as bigint)").as("qi"),
-        expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("pi"))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-        sum(expr("cast(qi as decimal(38,0))")).as("sx"),
-        sum(expr("cast(pi as decimal(38,0))")).as("sy"),
-        sum(expr("cast(qi * qi as decimal(38,0))")).as("sxx"),
-        sum(expr("cast(pi * pi as decimal(38,0))")).as("syy"),
-        sum(expr("cast(qi * pi as decimal(38,0))")).as("sxy"))
+        expr(s"cast(${snap("l_quantity", 2)} as bigint)").as("qi"),
+        expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("pi"))
+    val m = ExactMoments.moments(li.groupBy("l_returnflag"), "qi", "pi", regressionMoments)
     m.select(col("l_returnflag"), col("n"),
         expr(
           """(cast(n as double) * cast(sxy as double) - cast(sx as double) * cast(sy as double))
@@ -588,8 +579,7 @@ object Pipeline {
        |freq AS (SELECT lang, tok, count(*) AS c FROM toks GROUP BY lang, tok),
        |tot AS (SELECT lang, count(*) AS t FROM toks GROUP BY lang),
        |lp AS (SELECT freq.lang, tok,
-       |    CAST(floor(ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lp_e6
+       |    CAST(${snap("ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE))", 6)} AS BIGINT) AS lp_e6
        |  FROM freq JOIN tot ON freq.lang = tot.lang)
        |SELECT toks.doc_id, count(*) AS n_tok,
        |  CAST(sum(lp_e6) AS BIGINT) AS logp_sum_e6,
@@ -608,7 +598,7 @@ object Pipeline {
     val lp = freq
       .withColumn("t", sum("c").over(Window.partitionBy("lang")))
       .withColumn("lp_e6", expr(
-        "cast(floor(ln(cast(c as double) / cast(t as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(c as double) / cast(t as double))", 6)} as bigint)"))
       .select("lang", "tok", "lp_e6")
     toks.join(broadcast(lp), Seq("lang", "tok"))
       .groupBy("doc_id")

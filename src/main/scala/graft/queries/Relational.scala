@@ -127,8 +127,8 @@ object Relational {
         // tie-free by the pure-FP floor idiom), and the correctly-rounded
         // double of that long / 10⁴ equals the decimal→double cast
         // bit-for-bit — no per-row BigDecimal
-        expr("cast(cast(floor(l_extendedprice * cast(100 as double) + cast(0.5 as double)) as bigint)" +
-          " * (100 - cast(floor(l_discount * cast(100 as double) + cast(0.5 as double)) as bigint))" +
+        expr(s"cast(cast(${snap("l_extendedprice", 2)} as bigint)" +
+          s" * (100 - cast(${snap("l_discount", 2)} as bigint))" +
           " as double) / 10000").as("disc_price"),
         expr("l_quantity * 2").as("qty2"),
       ).orderBy("l_orderkey", "l_linenumber", "disc_price", "qty2")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Sqlh.snap
 
 /** SURVEY.md §2.8 — scalar function surface (identifier munging, unit
   * conversion, spec assembly in the reference). Engine-parity casts:
@@ -69,10 +70,10 @@ object Scalars {
 
     Q("fn_math",
       s"""SELECT o_orderkey,
-         |  CAST(floor(ln(o_totalprice) * 1000000 + 0.5) AS BIGINT) AS ln_e6,
-         |  CAST(floor(log10(o_totalprice) * 1000000 + 0.5) AS BIGINT) AS lg_e6,
-         |  CAST(floor(pow(o_totalprice, 0.5) * 1000000 + 0.5) AS BIGINT) AS pw_e6,
-         |  CAST(floor(sqrt(o_totalprice) * 1000000 + 0.5) AS BIGINT) AS sq_e6,
+         |  CAST(${snap("ln(o_totalprice)", 6)} AS BIGINT) AS ln_e6,
+         |  CAST(${snap("log10(o_totalprice)", 6)} AS BIGINT) AS lg_e6,
+         |  CAST(${snap("pow(o_totalprice, 0.5)", 6)} AS BIGINT) AS pw_e6,
+         |  CAST(${snap("sqrt(o_totalprice)", 6)} AS BIGINT) AS sq_e6,
          |  CAST(ceil(o_totalprice) AS DOUBLE) AS ce,
          |  CAST(floor(o_totalprice) AS DOUBLE) AS fl,
          |  abs(o_totalprice - 100000) AS ab,
@@ -81,10 +82,10 @@ object Scalars {
          |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, d) =>
       Tables.orders(s, d).select(
         col("o_orderkey"),
-        expr("cast(floor(ln(o_totalprice) * 1000000 + 0.5) as bigint)").as("ln_e6"),
-        expr("cast(floor(log10(o_totalprice) * 1000000 + 0.5) as bigint)").as("lg_e6"),
-        expr("cast(floor(pow(o_totalprice, 0.5) * 1000000 + 0.5) as bigint)").as("pw_e6"),
-        expr("cast(floor(sqrt(o_totalprice) * 1000000 + 0.5) as bigint)").as("sq_e6"),
+        expr(s"cast(${snap("ln(o_totalprice)", 6)} as bigint)").as("ln_e6"),
+        expr(s"cast(${snap("log10(o_totalprice)", 6)} as bigint)").as("lg_e6"),
+        expr(s"cast(${snap("pow(o_totalprice, 0.5)", 6)} as bigint)").as("pw_e6"),
+        expr(s"cast(${snap("sqrt(o_totalprice)", 6)} as bigint)").as("sq_e6"),
         ceil(col("o_totalprice")).cast("double").as("ce"),
         floor(col("o_totalprice")).cast("double").as("fl"),
         abs(col("o_totalprice") - 100000).as("ab"),

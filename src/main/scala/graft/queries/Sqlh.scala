@@ -12,6 +12,13 @@ package graft.queries
   * nondeterminism and decimal-precision-overflow divergence between engines.
   */
 object Sqlh {
+  /** floor(e·10^k + 0.5): a DOUBLE `e` snapped half-up to a whole count
+    * of 10^-k units (cents at k = 2). The same text on both engines, and
+    * never round(), whose half-tie mode differs between them; the integer
+    * literals fold to DOUBLE constants. The caller casts the result to
+    * its own integer type. */
+  def snap(e: String, k: Int): String = s"floor(($e) * 1${"0" * k} + 0.5)"
+
   /** Exact, order-independent sum of a double expression. */
   def dsum(e: String): String =
     s"cast(sum(cast(($e) as decimal(18,6))) as double)"
@@ -45,8 +52,7 @@ object Sqlh {
     * per-row decimal-cast cost, not to change the declared semantics.
     */
   def dsumSpark(e: String): String =
-    s"cast(sum(cast(floor(($e) * cast(1000000 as double) + cast(0.5 as double))" +
-      " as decimal(38,0))) / 1000000 as double)"
+    s"cast(sum(cast(${snap(e, 6)} as decimal(38,0))) / 1000000 as double)"
 
   /** Spark-side fast form of [[davg]]: the [[dsumSpark]] numerator (bit-
     * identical double) over the same single final division. */

@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactMoments
+import graft.functions.ExactRatio.{DuckF, SparkF}
+import Sqlh.snap
 
 /** Round-9 statistics / distribution-diagnostics suite: the dataset-level
   * summaries a training-data pipeline computes to audit a corpus before
@@ -40,7 +43,7 @@ object Stats {
       s"CAST(quantile_cont(vi, ${k}.0/8.0) * 8 AS BIGINT) AS q$k").mkString(",\n      |    ")
     val b = (1 to 7).map(k =>
       s"(CASE WHEN 8 * vi > q$k THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH t AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS vi
+    s"""WITH t AS (SELECT CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS vi
        |    FROM lineitem),
        |bounds AS (SELECT $q FROM t)
        |SELECT 1 + $b AS bin,
@@ -51,7 +54,7 @@ object Stats {
        |FROM t, bounds GROUP BY 1 ORDER BY bin""".stripMargin
   }) { (s, d) =>
     val t = Tables.lineitem(s, d)
-      .select(expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("vi"))
+      .select(expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("vi"))
     // boundaries via the distributed order-statistic operator: built-in
     // exact percentile buffers a value->count map of the whole near-unique
     // column (583k distinct / 600k rows at sf0.1 — measured 11.3s for 7
@@ -95,7 +98,7 @@ object Stats {
     */
   private val outlierMad = Q("outlier_mad",
     s"""WITH b AS (SELECT l_returnflag AS flag,
-       |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS vi FROM lineitem),
+       |    CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS vi FROM lineitem),
        |dom AS (SELECT flag, vi, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY flag, vi),
        |cum AS (SELECT flag, vi, c,
        |    CAST(sum(c) OVER (PARTITION BY flag ORDER BY vi) AS BIGINT) AS cw,
@@ -120,7 +123,7 @@ object Stats {
        |FROM m GROUP BY flag ORDER BY flag""".stripMargin) { (s, d) =>
     val dom = Tables.lineitem(s, d)
       .select(col("l_returnflag").as("flag"),
-        expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("vi"))
+        expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("vi"))
       .groupBy("flag", "vi").agg(count(lit(1)).as("c"))
     val perF = Window.partitionBy("flag")
     val med = dom
@@ -160,8 +163,7 @@ object Stats {
        |t AS (SELECT source, CAST(sum(c) AS BIGINT) AS t, count(*) AS n_langs
        |  FROM c GROUP BY source),
        |lp AS (SELECT c.source, c.c,
-       |    CAST(floor(ln(CAST(c.c AS DOUBLE) / CAST(t.t AS DOUBLE))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lp_e6
+       |    CAST(${snap("ln(CAST(c.c AS DOUBLE) / CAST(t.t AS DOUBLE))", 6)} AS BIGINT) AS lp_e6
        |  FROM c JOIN t ON c.source = t.source)
        |SELECT t.source, t.n_langs, t.t AS n_docs,
        |  -CAST(sum(c * lp_e6) AS DOUBLE)
@@ -177,7 +179,7 @@ object Stats {
       .withColumn("t", sum("c").over(Window.partitionBy("source")))
       .withColumn("n_langs", count(lit(1)).over(Window.partitionBy("source")))
     c.withColumn("lp_e6", expr(
-        "cast(floor(ln(cast(c as double) / cast(t as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(c as double) / cast(t as double))", 6)} as bigint)"))
       .groupBy("source", "n_langs", "t")
       // decimal-before-multiply: DuckDB computes Σ c·lp in HUGEINT; a
       // LongType product wraps past 9.2e18 (c ~1e12 × lp_e6 ~4e7 exceeds
@@ -204,8 +206,7 @@ object Stats {
        |g AS (SELECT lang, sum(c) AS cg FROM c GROUP BY lang),
        |tg AS (SELECT sum(cg) AS tg FROM g),
        |lr AS (SELECT c.source, c.c,
-       |    CAST(floor(ln(CAST(c.c * tg.tg AS DOUBLE) / CAST(ts.t * g.cg AS DOUBLE))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS lr_e6
+       |    CAST(${snap("ln(CAST(c.c * tg.tg AS DOUBLE) / CAST(ts.t * g.cg AS DOUBLE))", 6)} AS BIGINT) AS lr_e6
        |  FROM c JOIN ts ON c.source = ts.source
        |         JOIN g ON c.lang = g.lang CROSS JOIN tg)
        |SELECT ts.source, ts.t AS n_docs,
@@ -230,7 +231,7 @@ object Stats {
       // so widen one operand per product (exact to 38 digits, identical
       // double after the cast)
       .withColumn("lr_e6", expr(
-        "cast(floor(ln(cast(cast(c as decimal(19,0)) * tg as double) / cast(cast(t as decimal(19,0)) * cg as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(cast(c as decimal(19,0)) * tg as double) / cast(cast(t as decimal(19,0)) * cg as double))", 6)} as bigint)"))
       .groupBy("source", "t")
       .agg(sum(expr("cast(c as decimal(19,0)) * lr_e6")).as("slr"))
       .select(col("source"), col("t").as("n_docs"),
@@ -504,8 +505,8 @@ object Stats {
        |        FROM ix) t2),
        |cp AS (SELECT a, b, CAST(count(*) AS BIGINT) AS cab FROM pairs GROUP BY a, b)
        |SELECT a, b, cab,
-       |  CAST(floor(ln(CAST(CAST(cab AS DECIMAL(19,0)) * n_docs AS DOUBLE)
-       |             / CAST(CAST(sa.c1 AS DECIMAL(19,0)) * sb.c1 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS pmi_e6
+       |  CAST(${snap("ln(CAST(CAST(cab AS DECIMAL(19,0)) * n_docs AS DOUBLE)" +
+                 " / CAST(CAST(sa.c1 AS DECIMAL(19,0)) * sb.c1 AS DOUBLE))", 6)} AS BIGINT) AS pmi_e6
        |FROM cp JOIN singles sa ON cp.a = sa.t JOIN singles sb ON cp.b = sb.t
        |CROSS JOIN n
        |ORDER BY cab DESC, a, b LIMIT 50""".stripMargin) { (s, d) =>
@@ -532,8 +533,8 @@ object Stats {
       .join(broadcast(singles.select(col("t").as("b"), col("c1").as("cb"))), "b")
       .crossJoin(broadcast(n))
       .select(col("a"), col("b"), col("cab"),
-        expr("cast(floor(ln(cast(cast(cab as decimal(19,0)) * n_docs as double)" +
-          " / cast(cast(ca as decimal(19,0)) * cb as double)) * 1000000 + 0.5) as bigint)")
+        expr(s"cast(${snap("ln(cast(cast(cab as decimal(19,0)) * n_docs as double)" +
+          " / cast(cast(ca as decimal(19,0)) * cb as double))", 6)} as bigint)")
           .as("pmi_e6"))
       .orderBy(col("cab").desc, col("a"), col("b"))
       .limit(50)
@@ -553,7 +554,7 @@ object Stats {
     */
   private val scaleWinsorize = Q("scale_winsorize",
     s"""WITH t AS (SELECT l_returnflag AS flag,
-       |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS vi FROM lineitem),
+       |    CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS vi FROM lineitem),
        |b AS (SELECT flag,
        |    CAST(quantile_cont(vi, 1.0/8.0) * 8 AS BIGINT) AS lo8,
        |    CAST(quantile_cont(vi, 7.0/8.0) * 8 AS BIGINT) AS hi8
@@ -568,7 +569,7 @@ object Stats {
        |GROUP BY t.flag ORDER BY t.flag""".stripMargin) { (s, d) =>
     import s.implicits._
     val t = Tables.lineitem(s, d).select(col("l_returnflag").as("flag"),
-      expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("vi"))
+      expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("vi"))
     val b = graft.operators.ExactQuantiles
       .groupedScaled(t, "flag", "vi", Seq(1.0 / 8, 7.0 / 8), 8)
       .map { case (g, qs) => (g, qs(0), qs(1)) }.toSeq.toDF("flag", "lo8", "hi8")
@@ -643,9 +644,7 @@ object Stats {
        |  FROM toks GROUP BY lang, tok),
        |nd AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
        |idf AS (SELECT df.lang, tok,
-       |    CAST(floor(ln((CAST(n_docs AS DOUBLE) + CAST(1 AS DOUBLE))
-       |        / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS idf_e6
+       |    CAST(${snap("ln((CAST(n_docs AS DOUBLE) + CAST(1 AS DOUBLE)) / (CAST(df AS DOUBLE) + CAST(1 AS DOUBLE)))", 6)} AS BIGINT) AS idf_e6
        |  FROM df JOIN nd ON df.lang = nd.lang),
        |scored AS (SELECT doc_id, dtf.tok, tf * idf_e6 AS score_e6,
        |    row_number() OVER (PARTITION BY doc_id
@@ -666,7 +665,7 @@ object Stats {
     val nd = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     dtf.join(broadcast(nd), "lang")
       .withColumn("idf_e6", expr(
-        "cast(floor(ln((cast(n_docs as double) + 1.0d) / (cast(df as double) + 1.0d)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln((cast(n_docs as double) + 1.0d) / (cast(df as double) + 1.0d))", 6)} as bigint)"))
       .withColumn("score_e6", expr("tf * idf_e6"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("score_e6").desc, col("tok"))))
@@ -691,7 +690,7 @@ object Stats {
     { (s: org.apache.spark.sql.SparkSession, d: String) =>
       import s.implicits._
       val t = Tables.lineitem(s, d)
-        .select(expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("vi"))
+        .select(expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("vi"))
       val exact = graft.operators.ExactQuantiles
         .scaled(t, "vi", Seq(0.25, 0.5, 0.75), 4)
       val approx = t.agg(expr(
@@ -720,7 +719,7 @@ object Stats {
     * pins the exact side under the driver's hash.
     */
   private val aggQuartilesExact = Q("agg_quartiles_exact",
-    s"""WITH t AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS vi FROM lineitem),
+    s"""WITH t AS (SELECT CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS vi FROM lineitem),
        |q AS (SELECT CAST(quantile_cont(vi, 0.25) * 4 AS BIGINT) AS q1,
        |    CAST(quantile_cont(vi, 0.5) * 4 AS BIGINT) AS q2,
        |    CAST(quantile_cont(vi, 0.75) * 4 AS BIGINT) AS q3 FROM t)
@@ -731,7 +730,7 @@ object Stats {
        |ORDER BY p""".stripMargin) { (s, d) =>
     import s.implicits._
     val t = Tables.lineitem(s, d)
-      .select(expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("vi"))
+      .select(expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("vi"))
     val exact = graft.operators.ExactQuantiles
       .scaled(t, "vi", Seq(0.25, 0.5, 0.75), 4)
     Seq(0.25, 0.5, 0.75).zip(exact)
@@ -810,7 +809,7 @@ object Stats {
     s"""WITH c AS (SELECT o_custkey,
        |    max(epoch_us(o_orderdate) // 86400000000) AS r,
        |    count(*) AS f,
-       |    sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS m
+       |    sum(CAST(${snap("o_totalprice", 2)} AS BIGINT)) AS m
        |  FROM orders GROUP BY o_custkey),
        |q AS (SELECT $qs FROM c),
        |scored AS (SELECT ${score("r")}, ${score("f")}, ${score("m")}
@@ -832,7 +831,7 @@ object Stats {
         // o_orderdate reads as TIMESTAMP_NTZ; the UTC session makes the
         // TIMESTAMP cast instant-preserving, matching DuckDB's epoch_us
         expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000").as("day"),
-        expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)").as("cents"))
+        expr(s"cast(${snap("o_totalprice", 2)} as bigint)").as("cents"))
       .groupBy("o_custkey")
       .agg(max("day").as("r"), count(lit(1)).as("f"), sum("cents").as("m")))
     // ONE grouped ExactQuantiles pass for all nine boundaries (r21,
@@ -943,8 +942,8 @@ object Stats {
        |    CAST(sum(c_cur) AS BIGINT) AS t_cur FROM ct)
        |SELECT event_type, c_ref AS n_ref, c_cur AS n_cur,
        |  CAST((CAST(c_ref AS DECIMAL(19,0)) * t_cur - CAST(c_cur AS DECIMAL(19,0)) * t_ref)
-       |      * CAST(floor(ln(CAST(CAST(c_ref AS DECIMAL(19,0)) * t_cur AS DOUBLE)
-       |                    / CAST(CAST(c_cur AS DECIMAL(19,0)) * t_ref AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)
+       |      * CAST(${snap("ln(CAST(CAST(c_ref AS DECIMAL(19,0)) * t_cur AS DOUBLE)" +
+                   " / CAST(CAST(c_cur AS DECIMAL(19,0)) * t_ref AS DOUBLE))", 6)} AS BIGINT)
        |    AS DOUBLE)
        |  / (CAST(CAST(t_ref AS DECIMAL(19,0)) * t_cur AS DOUBLE) * 1000000.0) AS psi_contrib
        |FROM ct CROSS JOIN t ORDER BY event_type""".stripMargin) { (s, d) =>
@@ -972,8 +971,8 @@ object Stats {
       .withColumn("t_cur", sum("c_cur").over(all))
     ct
       .withColumn("lr_e6", expr(
-        "cast(floor(ln(cast(cast(c_ref as decimal(19,0)) * t_cur as double)" +
-          " / cast(cast(c_cur as decimal(19,0)) * t_ref as double)) * 1000000.0d + 0.5d) as bigint)"))
+        s"cast(${snap("ln(cast(cast(c_ref as decimal(19,0)) * t_cur as double)" +
+          " / cast(cast(c_cur as decimal(19,0)) * t_ref as double))", 6)} as bigint)"))
       .select(col("event_type"), col("c_ref").as("n_ref"), col("c_cur").as("n_cur"),
         expr("cast((cast(c_ref as decimal(19,0)) * t_cur - cast(c_cur as decimal(19,0)) * t_ref)" +
           " * lr_e6 as double)" +
@@ -998,7 +997,7 @@ object Stats {
     */
   private val aggWeightedMedian = Q("agg_weighted_median",
     s"""WITH b AS (SELECT l_returnflag AS flag, CAST(l_quantity AS BIGINT) AS q,
-       |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS wt FROM lineitem),
+       |    CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS wt FROM lineitem),
        |g AS (SELECT flag, q, CAST(sum(wt) AS BIGINT) AS w FROM b GROUP BY flag, q),
        |c AS (SELECT flag, q, w,
        |    CAST(sum(w) OVER (PARTITION BY flag ORDER BY q) AS BIGINT) AS cw,
@@ -1013,7 +1012,7 @@ object Stats {
     val b = Tables.lineitem(s, d).select(
       col("l_returnflag").as("flag"),
       col("l_quantity").cast("long").as("q"),
-      expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("wt"))
+      expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("wt"))
     graft.operators.WeightedQuantiles.of(b, "flag", "q", "wt",
       Seq((1, 4, "wq25"), (1, 2, "wq50"), (3, 4, "wq75")))
   }
@@ -1040,7 +1039,7 @@ object Stats {
   private val statsCramersV = Q("stats_cramers_v", {
     val e = "CAST(rtv AS DOUBLE) * ctv / nv"
     val dev = s"(CAST(o AS DOUBLE) - $e)"
-    val si = s"CAST(floor($dev * $dev / ($e) * 1000000000 + 0.5) AS BIGINT)"
+    val si = s"CAST(${snap(s"$dev * $dev / ($e)", 9)} AS BIGINT)"
     s"""WITH cells AS (SELECT c_mktsegment AS seg, c_nationkey AS nat,
        |    CAST(count(*) AS BIGINT) AS o FROM customer GROUP BY seg, nat),
        |rt AS (SELECT seg, CAST(sum(o) AS BIGINT) AS rtv FROM cells GROUP BY seg),
@@ -1060,7 +1059,7 @@ object Stats {
   }) { (s, d) =>
     val e = "CAST(rtv AS DOUBLE) * ctv / nv"
     val dev = s"(CAST(o AS DOUBLE) - $e)"
-    val si = s"CAST(floor($dev * $dev / ($e) * 1000000000 + 0.5) AS BIGINT)"
+    val si = s"CAST(${snap(s"$dev * $dev / ($e)", 9)} AS BIGINT)"
     val cells = Tables.customer(s, d)
       .groupBy(col("c_mktsegment").as("seg"), col("c_nationkey").as("nat"))
       .agg(count(lit(1)).as("o"))
@@ -1093,7 +1092,7 @@ object Stats {
     */
   private val statsKsTest = Q("stats_ks_test",
     s"""WITH b AS (SELECT event_type,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc,
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc,
        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events),
        |mid AS (SELECT (min(day) + max(day) + 1) // 2 AS m FROM b),
        |g AS (SELECT event_type, vc,
@@ -1116,7 +1115,7 @@ object Stats {
        |FROM d JOIN t ON t.event_type = d.event_type
        |ORDER BY d.event_type""".stripMargin) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type"),
-      expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"),
+      expr(s"cast(${snap("value", 2)} as bigint)").as("vc"),
       expr("cast(ts_us div 86400000000 as bigint)").as("day"))
     val mid = b.agg(expr("(min(day) + max(day) + 1) div 2").as("m"))
     val g = b.crossJoin(broadcast(mid))
@@ -1162,44 +1161,18 @@ object Stats {
     * driver-free explode of that row. k columns → k(k−1)/2 output
     * rows, one pass, no shuffle beyond the final 1-row exchange.
     */
-  private val statsCorrMatrix = Q("stats_corr_matrix", {
-    val cols = Seq(
-      "CAST(l_quantity AS BIGINT)",
-      "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)",
-      "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)",
-      "CAST(floor(l_tax * 100 + 0.5) AS BIGINT)")
-    val names = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val sums = (1 to 4).map(i => s"sum(x$i) AS s$i").mkString(", ")
-    val prods = (for (i <- 1 to 4; j <- i to 4)
-      yield s"sum(x$i * x$j) AS q$i$j").mkString(", ")
-    val branches = (for (i <- 1 to 4; j <- (i + 1) to 4) yield
-      s"""SELECT '${names(i - 1)}' AS col_x, '${names(j - 1)}' AS col_y, n,
-         |  CAST(CAST(n AS HUGEINT) * q$i$j - s$i * s$j AS DECIMAL(38,0)) AS cov_n2,
-         |  CAST(CAST(n AS HUGEINT) * q$i$i - s$i * s$i AS DECIMAL(38,0)) AS vxx,
-         |  CAST(CAST(n AS HUGEINT) * q$j$j - s$j * s$j AS DECIMAL(38,0)) AS vyy
-         |  FROM m""".stripMargin).mkString("\nUNION ALL ")
-    import graft.functions.ExactRatio
-    val inner = s"SELECT * FROM ($branches) u WHERE vxx > 0 AND vyy > 0"
-    val laddered = ExactRatio.applyDuck(inner,
-      ExactRatio.r2e6Stages(ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "r2_e6"))
-    s"""WITH b AS (SELECT ${cols.zipWithIndex.map { case (c, i) => s"$c AS x${i + 1}" }.mkString(", ")}
-       |  FROM lineitem),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS n, $sums, $prods FROM b)
-       |SELECT col_x, col_y, n,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  r2_e6, ${ExactRatio.signInt("cov_n2")} AS r_sign
-       |FROM $laddered q ORDER BY col_x, col_y""".stripMargin
-  }) { (s, d) =>
+  private val corrCols = Seq("l_quantity" -> "l_quantity",
+    "l_extendedprice" -> snap("l_extendedprice", 2),
+    "l_discount" -> snap("l_discount", 2), "l_tax" -> snap("l_tax", 2))
+  private val statsCorrMatrix = Q("stats_corr_matrix",
+    graft.operators.CorrMatrix.oracleSql(s"(SELECT ${corrCols.map { case (n, e) =>
+      s"CAST($e AS BIGINT) AS $n" }.mkString(", ")} FROM lineitem) t", corrCols.map(_._1))) { (s, d) =>
     // snap to integer units (quantity, cents, percent points) then hand
     // off to the generic one-pass operator — the query pins the UNITS,
     // the operator owns the moment/presentation arithmetic
-    val b = Tables.lineitem(s, d).select(
-      expr("cast(l_quantity as bigint)").as("l_quantity"),
-      expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("l_extendedprice"),
-      expr("cast(floor(l_discount * 100 + 0.5) as bigint)").as("l_discount"),
-      expr("cast(floor(l_tax * 100 + 0.5) as bigint)").as("l_tax"))
-    graft.operators.CorrMatrix.of(b,
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+    val b = Tables.lineitem(s, d).select(corrCols.map { case (n, e) =>
+      expr(s"cast($e as bigint)").as(n) }: _*)
+    graft.operators.CorrMatrix.of(b, corrCols.map(_._1))
   }
 
   /** Spearman rank correlation between quantity and price cents per
@@ -1231,7 +1204,7 @@ object Stats {
     */
   private val statsSpearman = Q("stats_spearman",
     s"""WITH b AS (SELECT l_returnflag AS flag, CAST(l_quantity AS BIGINT) AS x,
-       |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y FROM lineitem),
+       |    CAST(${snap("l_extendedprice", 2)} AS BIGINT) AS y FROM lineitem),
        |r AS (SELECT flag,
        |    rank() OVER (PARTITION BY flag ORDER BY x)
        |      + count(*) OVER (PARTITION BY flag ORDER BY x
@@ -1240,29 +1213,13 @@ object Stats {
        |      + count(*) OVER (PARTITION BY flag ORDER BY y
        |          RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ry
        |  FROM b),
-       |m AS (SELECT flag, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(rx AS HUGEINT)) AS sx, sum(CAST(ry AS HUGEINT)) AS sy,
-       |    sum(CAST(rx * ry AS HUGEINT)) AS sxy,
-       |    sum(CAST(rx * rx AS HUGEINT)) AS sxx,
-       |    sum(CAST(ry * ry AS HUGEINT)) AS syy
-       |  FROM r GROUP BY flag)
-       |SELECT flag, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  rho2_e6, ${graft.functions.ExactRatio.signInt("cov_n2")} AS rho_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT flag, n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS cov_n2,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS vxx,
-          |  CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DECIMAL(38,0)) AS vyy
-          |FROM m
-          |WHERE CAST(n AS HUGEINT) * sxx - sx * sx > 0
-          |  AND CAST(n AS HUGEINT) * syy - sy * sy > 0""".stripMargin,
-        graft.functions.ExactRatio.r2e6Stages(
-          graft.functions.ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "rho2_e6"))} q
-       |ORDER BY flag""".stripMargin) { (s, d) =>
+       |m AS (SELECT flag, ${ExactMoments.momentsDuck("rx", "ry")} FROM r GROUP BY flag)
+       |${ExactMoments.pearsonDuck(
+        s"SELECT flag, n, ${ExactMoments.selectList(ExactMoments.coTerms(DuckF))} FROM m",
+        Seq("flag"), "rho2_e6", "rho_sign")}""".stripMargin) { (s, d) =>
     val b = Tables.lineitem(s, d).select(col("l_returnflag").as("flag"),
       expr("cast(l_quantity as bigint)").as("x"),
-      expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("y"))
+      expr(s"cast(${snap("l_extendedprice", 2)} as bigint)").as("y"))
     // DOMAIN-REDUCED ranks (no per-row sort): the oracle's per-row
     // rank+cumcount window is mathematically 2·avgrank(v) = 2·cum(≤v) −
     // c(v) + 1, a function of the VALUE DOMAIN only — so collapse rows
@@ -1320,24 +1277,11 @@ object Stats {
           guarded("syy", "r2y", "r2y")): _*)
       .select(col("flag"), col("n"), merged("sx"), merged("sy"),
         merged("sxy"), merged("sxx"), merged("syy"))
-    def term(q: String, a: String, b2: String) =
-      s"cast(n as decimal(38,0)) * $q - $a * $b2"
     // a zero variance term means every value in the group is identical —
-    // rho is undefined there, and inf/NaN renderings are not hash-stable
-    // cross-engine, so degenerate groups are excluded on BOTH sides
-    val filtered = m.filter(expr(s"${term("sxx", "sx", "sx")} > 0") &&
-        expr(s"${term("syy", "sy", "sy")} > 0"))
-      .select(col("flag"), col("n"),
-        expr(s"cast(${term("sxy", "sx", "sy")} as decimal(38,0))").as("cov_n2"),
-        expr(s"cast(${term("sxx", "sx", "sx")} as decimal(38,0))").as("vxx"),
-        expr(s"cast(${term("syy", "sy", "sy")} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
-    ExactRatio.applySparkDomain(filtered,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "rho2_e6"))
-      .withColumn("rho_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
-      .select("flag", "n", "cov_m9", "rho2_e6", "rho_sign")
-      .orderBy("flag")
+    // rho is undefined there, and ExactMoments excludes such groups
+    ExactMoments.pearson(
+      m.select(col("flag") +: col("n") +: ExactMoments.cols(ExactMoments.coTerms(SparkF)): _*),
+      Seq("flag"), "rho2_e6", "rho_sign")
   }
 
   /** Lag-1 autocorrelation of the daily event count per event type — the
@@ -1362,26 +1306,11 @@ object Stats {
        |    lag(day) OVER (PARTITION BY event_type ORDER BY day) AS pday,
        |    lag(c) OVER (PARTITION BY event_type ORDER BY day) AS pc
        |  FROM daily),
-       |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS sx, sum(CAST(pc AS HUGEINT)) AS sy,
-       |    sum(CAST(c * pc AS HUGEINT)) AS sxy,
-       |    sum(CAST(c * c AS HUGEINT)) AS sxx,
-       |    sum(CAST(pc * pc AS HUGEINT)) AS syy
+       |m AS (SELECT event_type, ${ExactMoments.momentsDuck("c", "pc")}
        |  FROM p WHERE pday = day - 1 GROUP BY event_type)
-       |SELECT event_type, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  ac12_e6, ${graft.functions.ExactRatio.signInt("cov_n2")} AS ac1_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT event_type, n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS cov_n2,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS vxx,
-          |  CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DECIMAL(38,0)) AS vyy
-          |FROM m
-          |WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0
-          |  AND CAST(n AS HUGEINT) * syy - sy * sy > 0""".stripMargin,
-        graft.functions.ExactRatio.r2e6Stages(
-          graft.functions.ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "ac12_e6"))} q
-       |ORDER BY event_type""".stripMargin) { (s, d) =>
+       |${ExactMoments.pearsonDuck(
+        s"SELECT event_type, n, ${ExactMoments.selectList(ExactMoments.coTerms(DuckF))} FROM m",
+        Seq("event_type"), "ac12_e6", "ac1_sign")}""".stripMargin) { (s, d) =>
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), expr("cast(ts_us div 86400000000 as bigint)").as("day"))
       .agg(count(lit(1)).as("c"))
@@ -1390,30 +1319,11 @@ object Stats {
       .withColumn("pday", lag("day", 1).over(w))
       .withColumn("pc", lag("c", 1).over(w))
       .filter(col("pday") === col("day") - 1)
-    val m = p.groupBy("event_type").agg(count(lit(1)).as("n"),
-      sum(expr("cast(c as decimal(38,0))")).as("sx"),
-      sum(expr("cast(pc as decimal(38,0))")).as("sy"),
-      sum(expr("cast(c * pc as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(c * c as decimal(38,0))")).as("sxx"),
-      sum(expr("cast(pc * pc as decimal(38,0))")).as("syy"))
-    def term(q: String, a: String, b2: String) =
-      s"cast(n as decimal(38,0)) * $q - $a * $b2"
-    // same degenerate-variance exclusion as stats_spearman: a type whose
-    // daily counts never vary has no defined AC1 on either engine
-    val filtered = m.filter(col("n") >= 2 &&
-        expr(s"${term("sxx", "sx", "sx")} > 0") &&
-        expr(s"${term("syy", "sy", "sy")} > 0"))
-      .select(col("event_type"), col("n"),
-        expr(s"cast(${term("sxy", "sx", "sy")} as decimal(38,0))").as("cov_n2"),
-        expr(s"cast(${term("sxx", "sx", "sx")} as decimal(38,0))").as("vxx"),
-        expr(s"cast(${term("syy", "sy", "sy")} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
-    ExactRatio.applySparkDomain(filtered,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "ac12_e6"))
-      .withColumn("ac1_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
-      .select("event_type", "n", "cov_m9", "ac12_e6", "ac1_sign")
-      .orderBy("event_type")
+    // a type whose daily counts never vary has no defined AC1
+    val m = ExactMoments.moments(p.groupBy("event_type"), "c", "pc")
+    ExactMoments.pearson(
+      m.select(col("event_type") +: col("n") +: ExactMoments.cols(ExactMoments.coTerms(SparkF)): _*),
+      Seq("event_type"), "ac12_e6", "ac1_sign")
   }
 
   /** Mann-Whitney U between the first- and second-half days of each
@@ -1430,7 +1340,7 @@ object Stats {
     */
   private val statsMannwhitney = Q("stats_mannwhitney",
     s"""WITH b AS (SELECT event_type,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc,
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc,
        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events),
        |mid AS (SELECT (min(day) + max(day) + 1) // 2 AS m FROM b),
        |g AS (SELECT event_type, vc,
@@ -1451,7 +1361,7 @@ object Stats {
        |    // (CAST(2 AS HUGEINT) * n1 * n2) AS BIGINT) AS auc_e6
        |FROM u ORDER BY event_type""".stripMargin) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type"),
-      expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"),
+      expr(s"cast(${snap("value", 2)} as bigint)").as("vc"),
       expr("cast(ts_us div 86400000000 as bigint)").as("day"))
     val mid = b.agg(expr("(min(day) + max(day) + 1) div 2").as("m"))
     val g = b.crossJoin(broadcast(mid))
@@ -1501,7 +1411,7 @@ object Stats {
     */
   private val statsAnova = Q("stats_anova",
     s"""WITH b AS (SELECT event_type AS g,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |gm AS (SELECT g, CAST(count(*) AS BIGINT) AS ng,
        |    sum(CAST(vc AS HUGEINT)) AS sg,
        |    sum(CAST(vc * vc AS HUGEINT)) AS ssg FROM b GROUP BY g),
@@ -1531,7 +1441,7 @@ object Stats {
         graft.functions.ExactRatio.ratE6Stages(
           graft.functions.ExactRatio.DuckF, "ea", "eb", "eta2_e6"))} q""".stripMargin) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type").as("g"),
-      expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+      expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
     val gm = b.groupBy("g").agg(count(lit(1)).as("ng"),
       sum(expr("cast(vc as decimal(38,0))")).as("sg"),
       sum(expr("cast(vc * vc as decimal(38,0))")).as("ssg"))
@@ -1570,7 +1480,7 @@ object Stats {
         // of sst_n before the multiply.
         expr("cast(ssb_c2 as decimal(38,0)) * (n - k) * n").as("fa"),
         expr("greatest(cast(sst_n as decimal(38,0))" +
-          " - cast(n as decimal(38,0)) * ssb_c2," +
+          s" - ${ExactMoments.nTimes(SparkF, "ssb_c2")}," +
           " cast(1 as decimal(38,0))) * (k - 1)").as("fb"),
         expr("cast(ssb_c2 as decimal(38,0)) * n").as("ea"),
         expr("cast(sst_n as decimal(38,0))").as("eb"))
@@ -1667,9 +1577,7 @@ object Stats {
        |    CAST(sum(o) OVER (PARTITION BY nat) AS BIGINT) AS ctv,
        |    CAST(sum(o) OVER () AS BIGINT) AS nv FROM cells),
        |lp AS (SELECT *,
-       |    CAST(floor(ln((CAST(o AS DOUBLE) * CAST(nv AS DOUBLE))
-       |        / (CAST(rtv AS DOUBLE) * CAST(ctv AS DOUBLE)))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS mi_e6
+       |    CAST(${snap("ln((CAST(o AS DOUBLE) * CAST(nv AS DOUBLE)) / (CAST(rtv AS DOUBLE) * CAST(ctv AS DOUBLE)))", 6)} AS BIGINT) AS mi_e6
        |  FROM w)
        |SELECT max(nv) AS n,
        |  CAST(count(DISTINCT seg) AS BIGINT) AS n_seg,
@@ -1684,10 +1592,8 @@ object Stats {
       .withColumn("rtv", sum("o").over(Window.partitionBy("seg")))
       .withColumn("ctv", sum("o").over(Window.partitionBy("nat")))
       .withColumn("nv", sum("o").over(Window.partitionBy()))
-    w.withColumn("mi_e6", expr(
-        "cast(floor(ln((cast(o as double) * cast(nv as double))" +
-        " / (cast(rtv as double) * cast(ctv as double)))" +
-          " * 1000000.0d + 0.5d) as bigint)"))
+    w.withColumn("mi_e6", expr(s"cast(${snap("ln((cast(o as double) * cast(nv as double))" +
+        " / (cast(rtv as double) * cast(ctv as double)))", 6)} as bigint)"))
       .agg(max("nv").as("n"),
         countDistinct("seg").as("n_seg"), countDistinct("nat").as("n_nat"),
         sum(expr("o * mi_e6")).as("smi_e6"))
@@ -1725,14 +1631,11 @@ object Stats {
        |    CAST(sum(o) OVER (PARTITION BY nat) AS BIGINT) AS ctv,
        |    CAST(sum(o) OVER () AS BIGINT) AS nv FROM cells),
        |lp AS (SELECT *,
-       |    CAST(floor(ln((CAST(o AS DOUBLE) * CAST(nv AS DOUBLE))
-       |        / (CAST(rtv AS DOUBLE) * CAST(ctv AS DOUBLE)))
-       |      * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS mi_e6
+       |    CAST(${snap("ln((CAST(o AS DOUBLE) * CAST(nv AS DOUBLE)) / (CAST(rtv AS DOUBLE) * CAST(ctv AS DOUBLE)))", 6)} AS BIGINT) AS mi_e6
        |  FROM w),
        |colm AS (SELECT nat, max(ctv) AS ct, max(nv) AS nv FROM lp GROUP BY nat),
        |hn AS (SELECT CAST(-sum(CAST(ct AS HUGEINT)
-       |      * CAST(floor(ln(CAST(ct AS DOUBLE) / CAST(nv AS DOUBLE))
-       |        * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+       |      * CAST(${snap("ln(CAST(ct AS DOUBLE) / CAST(nv AS DOUBLE))", 6)} AS BIGINT))
        |    AS DECIMAL(38,0)) AS hnv FROM colm),
        |mi AS (SELECT max(nv) AS n,
        |    CAST(count(DISTINCT seg) AS BIGINT) AS n_seg,
@@ -1753,18 +1656,16 @@ object Stats {
       .withColumn("rtv", sum("o").over(Window.partitionBy("seg")))
       .withColumn("ctv", sum("o").over(Window.partitionBy("nat")))
       .withColumn("nv", sum("o").over(Window.partitionBy()))
-    val lp = w.withColumn("mi_e6", expr(
-      "cast(floor(ln((cast(o as double) * cast(nv as double))" +
-        " / (cast(rtv as double) * cast(ctv as double)))" +
-        " * 1000000.0d + 0.5d) as bigint)"))
+    val lp = w.withColumn("mi_e6", expr(s"cast(${snap("ln((cast(o as double) * cast(nv as double))" +
+        " / (cast(rtv as double) * cast(ctv as double)))", 6)} as bigint)"))
     val pinned = graft.Caching.pinOnce(lp)
     val hn = pinned.groupBy("nat").agg(max("ctv").as("ct"), max("nv").as("nv"))
       // 0 − sum, not unary minus: Spark's decimal negate rounds to 34
       // significant digits (the safeAbs class, ExactRatio r17) while
       // subtraction is exact at all 38
       .agg((lit(0).cast("decimal(38,0)") - sum(expr("cast(ct as decimal(38,0))" +
-        " * cast(floor(ln(cast(ct as double) / cast(nv as double))" +
-        " * 1000000.0d + 0.5d) as bigint)"))).cast("decimal(38,0)").as("hnv"))
+        s" * cast(${snap("ln(cast(ct as double) / cast(nv as double))", 6)} as bigint)")))
+        .cast("decimal(38,0)").as("hnv"))
     val mi = pinned.agg(max("nv").as("n"),
       countDistinct("seg").as("n_seg"), countDistinct("nat").as("n_nat"),
       sum(expr("cast(o as decimal(38,0)) * mi_e6")).cast("decimal(38,0)").as("smi"))
@@ -1780,6 +1681,10 @@ object Stats {
         expr(s"cast(${ExactRatio.signInt("smi")} * u0_e6 as bigint)").as("u_e6"))
   }
 
+  /** Expected Benford mass of leading digit `digit`, ×10⁶ (DuckDB text). */
+  private val benfordE6 =
+    snap("ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit) / ln(CAST(10 AS DOUBLE))", 6)
+
   /** First-significant-digit (Benford) profile of l_extendedprice — the
     * classic fabricated-/truncated-data screen a corpus audit runs over
     * monetary and count columns. The digit is extracted from the EXACT
@@ -1792,29 +1697,27 @@ object Stats {
     * domain; the windowed total rides the same reduction.
     */
   private val statsBenford = Q("stats_benford",
-    s"""WITH b AS (SELECT CAST(substr(CAST(CAST(floor(l_extendedprice * 100 + 0.5)
+    s"""WITH b AS (SELECT CAST(substr(CAST(CAST(${snap("l_extendedprice", 2)}
        |      AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit
        |  FROM lineitem WHERE l_extendedprice > 0),
        |g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_d FROM b GROUP BY digit),
        |w AS (SELECT digit, n_d, CAST(sum(n_d) OVER () AS BIGINT) AS n FROM g)
        |SELECT digit, n_d, n,
        |  CAST((CAST('1000000' AS HUGEINT) * n_d) // n AS BIGINT) AS share_e6,
-       |  CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)
-       |    / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS benford_e6,
+       |  CAST($benfordE6 AS BIGINT) AS benford_e6,
        |  CAST((CAST('1000000' AS HUGEINT) * n_d) // n AS BIGINT)
-       |    - CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)
-       |      / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS diff_e6
+       |    - CAST($benfordE6 AS BIGINT) AS diff_e6
        |FROM w ORDER BY digit""".stripMargin) { (s, d) =>
     val b = Tables.lineitem(s, d)
       .filter(col("l_extendedprice") > 0)
-      .select(expr("cast(substring(cast(cast(floor(l_extendedprice * 100 + 0.5)" +
+      .select(expr(s"cast(substring(cast(cast(${snap("l_extendedprice", 2)}" +
         " as bigint) as string), 1, 1) as bigint)").as("digit"))
     val g = b.groupBy("digit").agg(count(lit(1)).as("n_d"))
     g.withColumn("n", sum("n_d").over(Window.partitionBy()))
       .withColumn("share_e6",
         expr("cast((cast('1000000' as decimal(38,0)) * n_d) div n as bigint)"))
       .withColumn("benford_e6",
-        expr("cast(floor(ln(1.0d + 1.0d / digit) / ln(10.0d) * 1000000 + 0.5) as bigint)"))
+        expr(s"cast(${snap("ln(1.0d + 1.0d / digit) / ln(10.0d)", 6)} as bigint)"))
       .select(col("digit"), col("n_d"), col("n"), col("share_e6"),
         col("benford_e6"),
         expr("share_e6 - benford_e6").as("diff_e6"))
@@ -1950,15 +1853,14 @@ object Stats {
     */
   private val statsBenfordChisq = Q("stats_benford_chisq", {
     import graft.functions.ExactRatio
-    val be6 = "CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)" +
-      " / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
+    val be6 = s"CAST($benfordE6 AS BIGINT)"
     val inner =
       s"""SELECT digit, n,
-         |  (CAST(1000000 AS HUGEINT) * n_d - CAST(n AS HUGEINT) * $be6)
-         |    * (CAST(1000000 AS HUGEINT) * n_d - CAST(n AS HUGEINT) * $be6) AS nc,
+         |  (CAST(1000000 AS HUGEINT) * n_d - ${ExactMoments.nTimes(DuckF, be6)})
+         |    * (CAST(1000000 AS HUGEINT) * n_d - ${ExactMoments.nTimes(DuckF, be6)}) AS nc,
          |  CAST(1000000 AS HUGEINT) * n * $be6 AS dc
          |FROM w""".stripMargin
-    s"""WITH b AS (SELECT CAST(substr(CAST(CAST(floor(l_extendedprice * 100 + 0.5)
+    s"""WITH b AS (SELECT CAST(substr(CAST(CAST(${snap("l_extendedprice", 2)}
        |      AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit
        |  FROM lineitem WHERE l_extendedprice > 0),
        |g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_d FROM b GROUP BY digit),
@@ -1970,16 +1872,16 @@ object Stats {
           ExactRatio.ratE6Stages(ExactRatio.DuckF, "nc", "dc", "c_e6"))} q""".stripMargin
   }) { (s, d) =>
     import graft.functions.ExactRatio
-    val be6 = "cast(floor(ln(1.0d + 1.0d / digit) / ln(10.0d) * 1000000 + 0.5) as bigint)"
+    val be6 = s"cast(${snap("ln(1.0d + 1.0d / digit) / ln(10.0d)", 6)} as bigint)"
     val g = Tables.lineitem(s, d)
       .filter(col("l_extendedprice") > 0)
-      .select(expr("cast(substring(cast(cast(floor(l_extendedprice * 100 + 0.5)" +
+      .select(expr(s"cast(substring(cast(cast(${snap("l_extendedprice", 2)}" +
         " as bigint) as string), 1, 1) as bigint)").as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n_d"))
     val w = g.withColumn("n", sum("n_d").over(Window.partitionBy()))
       .select(col("digit"), col("n"),
-        expr(s"(cast(1000000 as decimal(38,0)) * n_d - cast(n as decimal(38,0)) * $be6)" +
-          s" * (cast(1000000 as decimal(38,0)) * n_d - cast(n as decimal(38,0)) * $be6)").as("nc"),
+        expr(s"(cast(1000000 as decimal(38,0)) * n_d - ${ExactMoments.nTimes(SparkF, be6)})" +
+          s" * (cast(1000000 as decimal(38,0)) * n_d - ${ExactMoments.nTimes(SparkF, be6)})").as("nc"),
         expr(s"cast(1000000 as decimal(38,0)) * n * $be6").as("dc"))
     ExactRatio.applySparkDomain(w,
         ExactRatio.ratE6Stages(ExactRatio.SparkF, "nc", "dc", "c_e6"))
@@ -2142,7 +2044,7 @@ object Stats {
     */
   private val statsLevene = Q("stats_levene",
     s"""WITH b AS (SELECT event_type AS g,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |    CAST(${snap("value", 2)} AS BIGINT) AS vc FROM events),
        |dom AS (SELECT g, vc, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY g, vc),
        |cum AS (SELECT g, vc, c,
        |    CAST(sum(c) OVER (PARTITION BY g ORDER BY vc) AS BIGINT) AS cw,
@@ -2181,7 +2083,7 @@ object Stats {
           graft.functions.ExactRatio.DuckF, "ea", "eb", "eta2_e6"))} q""".stripMargin) { (s, d) =>
     val dom = Tables.events(s, d)
       .select(col("event_type").as("g"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+        expr(s"cast(${snap("value", 2)} as bigint)").as("vc"))
       .groupBy("g", "vc").agg(count(lit(1)).as("c"))
     val perG = Window.partitionBy("g")
     val cum = dom
@@ -2216,7 +2118,7 @@ object Stats {
         // and the same ~n ≈ 1e8 loud-overflow scale ceiling, ADVICE r16)
         expr("cast(ssb_c2 as decimal(38,0)) * (n - k) * n").as("fa"),
         expr("greatest(cast(sst_n as decimal(38,0))" +
-          " - cast(n as decimal(38,0)) * ssb_c2," +
+          s" - ${ExactMoments.nTimes(SparkF, "ssb_c2")}," +
           " cast(1 as decimal(38,0))) * (k - 1)").as("fb"),
         expr("cast(ssb_c2 as decimal(38,0)) * n").as("ea"),
         expr("cast(sst_n as decimal(38,0))").as("eb"))
@@ -2247,20 +2149,23 @@ object Stats {
     * the |types|×|days| table. Degenerate guard exact: n ≥ 2 days and
     * a positive total.
     */
+  /** n² × the variance of the daily counts, exact. */
+  private def burstVar(f: graft.functions.ExactRatio.Flavor) =
+    ExactMoments.term(f, "scc", "sc", "sc")
+
   private val eventsBurstiness = Q("events_burstiness",
     s"""WITH daily AS (SELECT event_type,
        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
        |    CAST(count(*) AS BIGINT) AS c
        |  FROM events GROUP BY event_type, day),
        |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS sc,
-       |    sum(CAST(c * c AS HUGEINT)) AS scc
+       |    ${ExactMoments.sum(DuckF, "c")} AS sc,
+       |    ${ExactMoments.sum(DuckF, "c", "c")} AS scc
        |  FROM daily GROUP BY event_type)
        |SELECT event_type, n, CAST(sc AS BIGINT) AS total,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF,
-          "CAST(n AS HUGEINT) * scc - sc * sc")} AS var_m9,
-       |  CAST((CAST('1000000' AS HUGEINT) * (CAST(n AS HUGEINT) * scc - sc * sc))
-       |    // (CAST(n AS HUGEINT) * sc) AS BIGINT) AS fano_e6
+       |  ${graft.functions.ExactRatio.modDigest(DuckF, burstVar(DuckF))} AS var_m9,
+       |  CAST((CAST('1000000' AS HUGEINT) * (${burstVar(DuckF)}))
+       |    // (${ExactMoments.nTimes(DuckF, "sc")}) AS BIGINT) AS fano_e6
        |FROM m WHERE n >= 2 AND sc > 0
        |ORDER BY event_type""".stripMargin) { (s, d) =>
     val daily = Tables.events(s, d)
@@ -2268,23 +2173,21 @@ object Stats {
       .agg(count(lit(1)).as("c"))
     daily.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        sum(expr("cast(c as decimal(38,0))")).as("sc"),
-        sum(expr("cast(c * c as decimal(38,0))")).as("scc"))
+        expr(ExactMoments.sum(SparkF, "c")).as("sc"),
+        expr(ExactMoments.sum(SparkF, "c", "c")).as("scc"))
       .filter(col("n") >= 2 && col("sc") > 0)
       .select(col("event_type"), col("n"),
         expr("cast(sc as bigint)").as("total"),
-        expr(graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.SparkF,
-          "cast(n as decimal(38,0)) * scc - sc * sc")).as("var_m9"),
-        expr("cast((cast('1000000' as decimal(38,0))" +
-          " * (cast(n as decimal(38,0)) * scc - sc * sc))" +
-          " div (cast(n as decimal(38,0)) * sc) as bigint)").as("fano_e6"))
+        expr(graft.functions.ExactRatio.modDigest(SparkF, burstVar(SparkF))).as("var_m9"),
+        expr(s"cast((cast('1000000' as decimal(38,0)) * (${burstVar(SparkF)}))" +
+          s" div (${ExactMoments.nTimes(SparkF, "sc")}) as bigint)").as("fano_e6"))
       .orderBy("event_type")
   }
 
   private val statsKendallTau = Q("stats_kendall_tau",
     s"""WITH g AS (SELECT c_nationkey AS nk,
        |    CAST(count(*) AS BIGINT) AS x,
-       |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS HUGEINT))
+       |    CAST(sum(CAST(${snap("o_totalprice", 2)} AS HUGEINT))
        |      AS BIGINT) AS y
        |  FROM orders JOIN customer ON o_custkey = c_custkey
        |  GROUP BY c_nationkey),
@@ -2317,7 +2220,7 @@ object Stats {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nk"))
       .agg(count(lit(1)).as("x"),
-        sum(expr("cast(floor(o_totalprice * 100 + 0.5) as decimal(38,0))"))
+        sum(expr(s"cast(${snap("o_totalprice", 2)} as decimal(38,0))"))
           .cast("bigint").as("y")))
     val p = g.as("a").join(
       g.select(col("nk").as("bnk"), col("x").as("bx"), col("y").as("yb")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Sqlh.snap
 
 /** SURVEY.md §2.10 — LLM-data-pipeline operators: tokenization, corpus
   * stats, vector similarity search (brute-force top-k with the left side
@@ -249,7 +250,7 @@ object TextSim {
     // — the builtin list_cosine_similarity is 1 ulp off on ~1/3 of pairs,
     // enough to swap two near-tied neighbors' ranks cross-engine
     Q("sim_cosine_topk",
-      s"""SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk, CAST(floor(sim * 1000 + 0.5) AS BIGINT) AS sim_e3
+      s"""SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk, CAST(${snap("sim", 3)} AS BIGINT) AS sim_e3
          |FROM (
          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          |    ${cosineSql("a", "b")} AS sim,
@@ -264,7 +265,7 @@ object TextSim {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 3)
         .select(col("a_id").as("vec_id"), col("b_id").as("neighbor_id"),
-          col("rnk"), expr("cast(floor(sim * 1000 + 0.5) as bigint)").as("sim_e3"))
+          col("rnk"), expr(s"cast(${snap("sim", 3)} as bigint)").as("sim_e3"))
         .orderBy("vec_id", "rnk")
     },
 

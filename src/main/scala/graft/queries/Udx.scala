@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Sqlh.snap
 
 /** SURVEY.md §2.12 — user-defined scalar / aggregate / table functions.
   * Each oracle states the SEMANTICS in plain SQL (the UDx itself is
@@ -55,12 +56,12 @@ object Udx {
 
     Q("udaf_typed",
       s"""SELECT l_returnflag,
-         |  CAST(floor(exp(CAST(SUM(CAST(ln(l_extendedprice) AS DECIMAL(18,12))) AS DOUBLE) / COUNT(*)) * 100 + 0.5) AS BIGINT) AS geo_cents
+         |  CAST(${snap("exp(CAST(SUM(CAST(ln(l_extendedprice) AS DECIMAL(18,12))) AS DOUBLE) / COUNT(*))", 2)} AS BIGINT) AS geo_cents
          |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
       s.udf.register("geo_mean", org.apache.spark.sql.functions.udaf(GeoMean))
       Tables.lineitem(s, d)
         .groupBy("l_returnflag")
-        .agg(expr("cast(floor(geo_mean(l_extendedprice) * 100 + 0.5) as bigint)")
+        .agg(expr(s"cast(${snap("geo_mean(l_extendedprice)", 2)} as bigint)")
           .as("geo_cents"))
         .orderBy("l_returnflag")
     },

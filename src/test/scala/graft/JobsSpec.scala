@@ -77,7 +77,7 @@ class JobsSpec extends AnyFunSuite {
     // r22: the pair-frame materialization count now doubles as the CC
     // edge-count bound (jaccardPairsCounted -> graphSizeHint) and the
     // warm gram kernel skips its redundant cache-read count
-    // (materializeRetiring pins cold-only) — build 14 -> 12
+    // (Caching.materializeRetiring pins cold-only) — build 14 -> 12
     "dedup_cluster" -> (12, 5),
     "agg_approx_percentile" -> (5, 3),
     "text_keyword_extract" -> (0, 8))

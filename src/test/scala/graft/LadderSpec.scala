@@ -196,7 +196,11 @@ class LadderSpec extends AnyFunSuite {
     * caller running green under the armed guard.
     */
   test("applySparkDomain call-site census matches the audited bounded-domain set") {
-    val callRe = "applysparkdomain\\s*\\(".r // joinedSource lowercases
+    // ExactMoments' Spark finishes run applySparkDomain on their caller's
+    // frame, so a call to either counts as a call site of its own: each
+    // bounded-domain caller stays audited in its own file, and the two
+    // calls inside ExactMoments.scala are the finishes themselves
+    val callRe = "(applysparkdomain|exactmoments\\.(pearson|slope))\\s*\\(".r // joinedSource lowercases
     val audited = Map(
       // stats_corr_matrix (+ spearman's rank reuse) — k·(k+1)/2 column pairs
       "CorrMatrix.scala" -> 1,
@@ -207,7 +211,9 @@ class LadderSpec extends AnyFunSuite {
       // stats_kendall_tau — per-flag / per-lag / per-group moment tables
       "Stats.scala" -> 8,
       // corpus_heaps — per-decile-prefix vocab curve (bounded bucket count)
-      "Corpus.scala" -> 1)
+      "Corpus.scala" -> 1,
+      // ExactMoments.pearson and ExactMoments.slope
+      "ExactMoments.scala" -> 2)
     // ADVICE r19: walk ALL of src/main/scala (not just lintFiles) so a new
     // caller in multimodal/streaming/sources/plans/top-level — or inside
     // ExactRatio.scala itself — cannot evade the census; only the
@@ -287,6 +293,65 @@ class LadderSpec extends AnyFunSuite {
       .select("id", "m9").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     samples.foreach { case (i, v) =>
       assert(out(i) == (v.abs mod BigInt(1000000007)).toLong, s"modDigest($v)")
+    }
+  }
+
+  // --- ExactMoments: the shared Pearson / OLS-slope kernel ---------------
+  import graft.functions.ExactMoments
+
+  private def pearsonOf(df: org.apache.spark.sql.DataFrame) = {
+    val m = ExactMoments.moments(df.groupBy("g"), "x", "y")
+    ExactMoments.pearson(
+      m.select(col("g") +: col("n") +: ExactMoments.cols(
+        ExactMoments.coTerms(ExactRatio.SparkF)): _*),
+      Seq("g"), "r2_e6", "r_sign")
+  }
+
+  private def slopeOf(df: org.apache.spark.sql.DataFrame) =
+    ExactMoments.slope(ExactMoments.moments(df.groupBy(), "x", "y", ExactMoments.Slope),
+      "slope_e6")
+
+  test("ExactMoments pearson and slope drop one-row, constant-x and empty inputs") {
+    import s.implicits._
+    val oneRow = Seq((1, 3L, 7L))
+    val constX = Seq((2, 5L, 1L), (2, 5L, 4L), (2, 5L, 9L))
+    val defined = Seq((3, 1L, 2L), (3, 2L, 5L), (3, 4L, 4L))
+    val all = (oneRow ++ constX ++ defined).toDF("g", "x", "y")
+    assert(pearsonOf(all).collect().map(_.getInt(0)).toSeq == Seq(3),
+      "pearson must keep only the defined group")
+    assert(pearsonOf(all.limit(0)).collect().isEmpty)
+    Seq("one row" -> oneRow, "constant x" -> constX, "empty" -> Nil).foreach {
+      case (name, rows) =>
+        assert(slopeOf(rows.toDF("g", "x", "y")).collect().isEmpty, s"slope on $name input")
+    }
+    assert(slopeOf(defined.toDF("g", "x", "y")).collect().length == 1)
+  }
+
+  test("ExactMoments slope == BigInt replica on random integer inputs") {
+    import s.implicits._
+    val p = BigInt(1000000007)
+    // per-row |x|, |y| < 10^9 keeps every int64 product exact; 1- to
+    // 9-digit magnitudes drive the sums from a few digits to ~10^20
+    val samples = (1 to 12).map { i =>
+      val n = 2 + rnd.nextInt(40)
+      val dx = 1 + rnd.nextInt(9); val dy = 1 + rnd.nextInt(9)
+      def v(d: Int) = { val b = randDigits(d).toLong; if (rnd.nextBoolean()) -b else b }
+      i -> Seq.fill(n)((v(dx), v(dy)))
+    }
+    val out = samples.map { case (i, xy) =>
+      slopeOf(xy.toDF("x", "y")).withColumn("id", lit(i))
+    }.reduce(_ union _).collect()
+      .map(r => r.getInt(4) -> (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    samples.foreach { case (i, xy) =>
+      val n = BigInt(xy.size)
+      val (sx, sy) = (xy.map(t => BigInt(t._1)).sum, xy.map(t => BigInt(t._2)).sum)
+      val sxy = xy.map(t => BigInt(t._1) * t._2).sum
+      val sxx = xy.map(t => BigInt(t._1) * t._1).sum
+      val num = n * sxy - sx * sy
+      val den = n * sxx - sx * sx
+      if (den <= 0) assert(!out.contains(i), s"sample $i: undefined slope emitted")
+      else assert(out(i) == ((xy.size.toLong, (num.abs mod p).toLong, (den mod p).toLong,
+        num.signum * ratE6(num.abs, den))), s"sample $i (n=$n, num=$num, den=$den)")
     }
   }
 }

@@ -220,6 +220,23 @@ class MlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(rows.size >= 2, "clustering must keep at least two clusters")
   }
 
+  test("kmeans_iter returns zero rows on an empty corpus and on empty vectors") {
+    // schema-only table: no seeds, so no centroid literal to inline; empty
+    // vectors: seeds exist but each centroid literal is a 0-element array
+    val variants = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "schema-only" -> (_.limit(0)),
+      "empty vectors" -> (_.withColumn("embedding", expr("slice(embedding, 1, 0)"))))
+    variants.foreach { case (name, derive) =>
+      TestSpark.withTempDir("graft_kmeans_degenerate") { dir =>
+        derive(Tables.embeddings(s, d)).write.parquet(s"$dir/embeddings.parquet")
+        val out = SparkEntry.queries("kmeans_iter")(s, dir)
+        assert(out.columns.toSeq == Seq("c", "n", "inertia", "cent_sum"), name)
+        assert(out.collect().isEmpty, s"$name: expected no clusters")
+        s.catalog.clearCache()
+      }
+    }
+  }
+
   test("RF pipeline learns a separable target from embeddings") {
     import org.apache.spark.ml.Pipeline
     import org.apache.spark.ml.classification.RandomForestClassifier
