@@ -3,18 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // every time derivation is timezone-independent by construction
-      // (Tables.withEventTime/withNtz), but pin UTC anyway so Bench runs
-      // under the exact session the BASELINE.md protocol documents and
-      // Verify/tests use — no timing-only path may diverge semantically
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Verify.session()
     // warm the JVM (codegen pipeline, parquet reader, join/window/agg
     // operator classes, noop sink) so the first timed query doesn't absorb
     // one-time JIT/classloading cost — rounds 4-5 showed 1-9 s phantom

@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   *     `bloom_agg` / `bloom_might_contain` (Spark-internal bloom pair);
   *   - the `TopKPerGroup` planner strategy (bounded-heap per-group top-k);
   *   - the `TopKRewrite` optimizer rule (the `row_number() <= k` window
-  *     idiom auto-plans as the heap operator; opt out per session with
-  *     `spark.graft.topkRewrite.enabled=false`).
+  *     idiom auto-plans as the heap operator).
   *
   * `install` deliberately does NOT touch session confs — shuffle
   * partitioning, AQE, timezone and ANSI settings belong to the session

@@ -27,8 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // install graft.operators.TopK.ensureStrategy performs
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // auto-rewrite of the window-rank top-k idiom into the bounded-heap
-    // operator (strictly gated — see TopKRewrite scaladoc; opt out with
-    // spark.graft.topkRewrite.enabled=false)
+    // operator (strictly gated — see TopKRewrite scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     // builders shared with DotProduct.register / PolyHashArr.register —
     // one arity-validation implementation for both registration paths

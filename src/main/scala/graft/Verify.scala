@@ -4,16 +4,29 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+  /** The one session the mains (Verify, Bench, KeyProbe) run under:
+    * `local[SPARK_GRAFT_CPUS]`, one shuffle partition per core, UI off.
+    */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      // every time derivation is timezone-independent by construction
+      // (Tables.withEventTime/withNtz), but pin UTC anyway so Bench and
+      // KeyProbe run under the exact session the BASELINE.md protocol
+      // documents and Verify/tests use — no timing-only path may diverge
+      // semantically
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     // dev-only filter (unset for the driver): comma-separated key list to
     // verify a subset while iterating — e.g. SPARK_GRAFT_KEYS=ann_lsh_bucket

@@ -670,9 +670,9 @@ object LlmOps {
       var cent: Seq[(Long, Seq[Long])] = v.orderBy("vec_id").limit(4)
         .collect().toSeq.sortBy(_.getLong(0)).zipWithIndex
         .map { case (r, i) => (i.toLong, r.getSeq[Long](1)) }
-      // Jobs at the JobsSpec config (sf0.001, local[4]): build 8, run 5,
-      // pinned there. tools/actioncount runs at sf0.1/local[32], where AQE
-      // plans other stage jobs, so its counts are not comparable.
+      // Jobs at the KeyProbeSpec config (sf0.001, local[4]): build 8, run
+      // 5, pinned there. At other scale factors or core counts AQE plans
+      // other stage jobs, so KeyProbe counts there are not comparable.
       def assignAgainst(c: Seq[(Long, Seq[Long])]) =
         // no centroids (empty corpus, or every vector empty): nothing to
         // assign, and `array_min(array())` would not analyze

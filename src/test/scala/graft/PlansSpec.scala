@@ -43,27 +43,19 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
 
   test("TopKRewrite: the window-rank idiom auto-plans as bounded heaps, rows identical") {
     val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    def q = Tables.orders(s, d)
+      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+    def rows = q.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
     operators.TopK.ensureRewrite(s)
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      def q = Tables.orders(s, d)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+    val got = try {
       val plan = q.queryExecution.executedPlan.toString
       assert("TopKPerGroup".r.findAllIn(plan).length == 2,
         s"window idiom did not rewrite to the heap operator:\n$plan")
-      val got = q.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
-      // identical rows INCLUDING the recomputed rank when the rule is off
-      s.conf.set(plans.TopKRewrite.ConfKey, "false")
-      val offPlan = q.queryExecution.executedPlan.toString
-      assert(!offPlan.contains("TopKPerGroup"), s"conf kill-switch ignored:\n$offPlan")
-      val off = q.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
-      assert(got == off, "rewritten rows diverge from the window idiom")
-      s.conf.unset(plans.TopKRewrite.ConfKey)
       // ineligible shapes pass through untouched: rank() is not row_number
       val rankQ = Tables.orders(s, d)
         .withColumn("rk", rank().over(w)).filter(col("rk") <= 3)
@@ -75,11 +67,14 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
           org.apache.spark.sql.expressions.Window.partitionBy("o_custkey")))
         .filter(col("rn") <= 3)
       assert(!twoQ.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+      rows
     } finally {
-      s.conf.unset(plans.TopKRewrite.ConfKey)
       cs.experimental.extraOptimizations =
         cs.experimental.extraOptimizations.filterNot(_ == plans.TopKRewrite)
     }
+    // the reference is the same idiom planned without the rule: identical
+    // rows INCLUDING the recomputed rank
+    assert(got == rows, "rewritten rows diverge from the window idiom")
   }
 
   test("scan_partitioned prunes to the lang=en directory and matches the flat scan") {

@@ -14,7 +14,7 @@ Usage:
   # after the round's idle three-run (Bench.scala x3 on a load<1 host,
   # output concatenated into one log):
   python3 tools/benchledger.py append <round> <idle_log> \
-      [BENCHLEDGER.jsonl] [--timekeys <timekey_log>]
+      [BENCHLEDGER.jsonl] [--timekeys <graft.KeyProbe stdout log>]
   # then diff the last two rounds and paste the output into BASELINE.md:
   python3 tools/benchledger.py diff [BENCHLEDGER.jsonl]
 
@@ -24,12 +24,13 @@ keys by seconds). New/removed keys are listed separately. Informational
 exit 0 — the human adjudicates (a deliberate re-plan is expected to
 move its key; the point is that it moves IN THE LEDGER, not silently).
 
---timekeys (VERDICT r20 item 1): suite medians are shared-JVM,
-suite-order numbers — same-day settled runs drift +-4-17% per key, which
-forced a manual adjudication table every round. Passing the output of
-tools/timekeys.scala (isolated fresh-JVM, warm, 3-run medians for the
-top-cost keys) OVERRIDES those keys' suite medians in the ledger line
-and records them under "isolated", so cmd_diff compares
+--timekeys: suite medians are shared-JVM, suite-order numbers — same-day
+settled runs drift +-4-17% per key, which forced a manual adjudication
+table every round. Passing the stdout of
+`sbt "runMain graft.KeyProbe <sfDir> <keys>"` (a fresh JVM apart from
+the suite run, every key warmed, 3-run medians for the top-cost keys,
+one TIMEKEY line each) OVERRIDES those keys' suite medians in the ledger
+line and records them under "isolated", so cmd_diff compares
 isolation-protocol numbers wherever they exist. The suite run still
 supplies total_med and every non-isolated key.
 
@@ -54,7 +55,7 @@ def read_ledger(path):
 
 def read_timekeys(path):
     """Parse `TIMEKEY <key> med=<sec> runs=...` lines from a
-    tools/timekeys.scala log into {key: median_sec}."""
+    graft.KeyProbe log into {key: median_sec}."""
     meds = {}
     with open(path) as f:
         for line in f:

@@ -5,10 +5,10 @@
 // script rewrites each sf dir's tables into 32-way split parquet DIRECTORIES
 // under /tmp (driver fixtures untouched; correctness runs still read the
 // originals), so a scan gets 32 input splits and the 100×-scale parallelism
-// claim becomes measurable: run tools/timekeys.scala once against the
-// original dir and once against the restaged dir (same confs, same jar) and
-// diff per-key medians. Values are identical — only file layout changes;
-// every keyed query is either order-insensitive before its final sort or
+// claim becomes measurable: run `sbt "runMain graft.KeyProbe <dir> <keys>"`
+// once against the original dir and once against the restaged dir (same
+// SPARK_GRAFT_CPUS) and diff per-key medians. Values are identical — only
+// file layout changes; every keyed query is either order-insensitive before its final sort or
 // carries a total ORDER BY (SURVEY §7.3).
 //   /opt/spark/bin/spark-shell --master 'local[32]' \
 //     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
@@ -21,7 +21,7 @@ val out = sys.env.getOrElse("SPARK_GRAFT_SPLIT_OUT", "/tmp/graft_split32")
 val splits = sys.env.getOrElse("SPARK_GRAFT_SPLITS", "32").toInt
 val tables = Seq("region", "nation", "customer", "supplier", "part",
   "orders", "lineitem", "events", "documents", "embeddings")
-// sf0.001 is restaged too (tiny) so timekeys' warm-on-sibling convention
+// sf0.001 is restaged too (tiny) so Bench's warm-on-sibling convention
 // works unchanged against the restaged tree
 for (sf <- Seq("sf0.001", "sf0.1"); t <- tables) {
   val src = s"/root/testdata/$sf/$t.parquet"
