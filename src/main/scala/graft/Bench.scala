@@ -36,14 +36,14 @@ object Bench {
       System.err.println(s"[bench] stage warm-up failed: ${e.getMessage}")
     }
     // Warm EVERY key once, untimed, against the tiny sf0.001 sibling.
-    // Rationale: the r16 8-vs-32-CPU comparison showed per-key times
+    // Rationale: an 8-vs-32-CPU comparison showed per-key times
     // identical at both widths (stats_spearman 4.09 vs 3.93, kmeans_iter
     // 2.09 vs 2.08 …) —
     // at sf0.1 the timed region is dominated by SERIAL driver-side work
     // (whole-stage codegen compile + planning), not data. That serial
-    // CPU is exactly what a contended driver host multiplies (BENCH_r15:
-    // 911 s there vs 172.76 s for the identical jar/protocol on an idle
-    // host — token_pmi 97.2 s vs 1.54 s). A real sf0.001 pass of a key
+    // CPU is exactly what a contended driver host multiplies (one
+    // contended run measured 911 s vs 172.76 s for the identical
+    // jar/protocol on an idle host — token_pmi 97.2 s vs 1.54 s). A real sf0.001 pass of a key
     // compiles the SAME generated classes its sf0.1 plan needs (janino
     // caches by source text), so the timed run measures steady-state
     // execution — what a production pipeline, which compiles a plan once
@@ -76,7 +76,7 @@ object Bench {
       }
     }
     spark.catalog.clearCache()
-    // Shared-kernel warm (r15 verdict item 4): the gram/signature kernels
+    // Shared-kernel warm: the gram/signature kernels
     // are the dedup family's shared persisted artifacts (a production
     // warehouse writes the signature index once per ingest run —
     // dedup_incremental's premise), so their construction is materialized
@@ -130,10 +130,9 @@ object Bench {
     // tail truncation keeps the END of stdout: if this line outgrew the
     // ~2000-char archive window its HEAD (the total) would be cut — and the
     // window must ALSO hold sbt's trailing "[success] Total time: …" line
-    // (~80 chars) plus any late warnings. Round 7 proved 1950 is not safe:
-    // the 1-decimal 89-query map fit 1950 but the driver still recorded
-    // parsed:null because sbt's epilogue pushed the line head out of the
-    // tail. Hard-cap the contract line at 1400 chars by keeping only the
+    // (~80 chars) plus any late warnings. 1950 is not safe: a 1-decimal
+    // 89-query map fit 1950 but was still recorded as parsed:null because
+    // sbt's epilogue pushed the line head out of the tail. Hard-cap the contract line at 1400 chars by keeping only the
     // SLOWEST queries that fit (they are the ones worth reading in a bench
     // summary); full precision for every query is on the queries_full line.
     // "failed" makes crashed queries visible in the archived tail: "n"
@@ -162,19 +161,14 @@ object Bench {
     val line = sb.toString
     assert(line.length <= budget, s"contract line ${line.length} > $budget")
     println(line)
-    // r9's driver archive had the full contract line in the stdout tail
-    // yet recorded parsed:null — when run under sbt, stdout lines carry an
-    // "[info] " prefix (and possibly ANSI codes) a strict parser rejects.
-    // Also drop the line in a file so the bench result survives any
-    // stdout-decoration regardless of the launcher.
-    // VERDICT r21 item 1b: the stdout contract line only fits the slowest
-    // ~58 keys, which starved the driver's round-over-round diff (24
-    // phantom "dropped" + 20 phantom "new" keys in PERF_r21). Write the
-    // full-precision 220-key queries_full line to the file as well
-    // (additions-only: the stdout contract is byte-unchanged) so a
-    // complete per-key diff is always recoverable from the archive.
+    // Under sbt, stdout lines can carry an "[info] " prefix (and ANSI
+    // codes) a strict parser rejects, so the bench result also goes to a
+    // file as JSON lines: the contract line, then the full-precision
+    // queries_full line with every key (the stdout line only fits the
+    // slowest ~58 keys, which is too few for a per-key diff between runs).
+    // The stdout contract stays byte-unchanged.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/bench_last.json"),
+      java.nio.file.Paths.get("target/bench_last.jsonl"),
       line + "\n" +
         s"""{"metric":"queries_full","queries":$qsFull,"sf":"$sfDir"}""" + "\n")
     catch { case _: Throwable => () } // best-effort; stdout stays the contract

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
+import graft.functions.IntVec
+
 /** Multimodal-column plumbing (north-star `[N]`): image/audio/video are
   * opaque `binary` columns with typed metadata; decode / feature-extract is
   * a per-partition batch operation so a real decoder (JNI image lib, ffmpeg
@@ -67,7 +69,7 @@ object Multimodal {
     * DuckDB-side INT64 product cannot overflow). The extra round matters:
     * consecutive flat indices step by the golden-ratio constant, so the
     * raw Knuth top bit makes every plane a window of ONE quasi-periodic
-    * ±1 sequence — correlated planes cost real LSH recall (measured r12:
+    * ±1 sequence — correlated planes cost real LSH recall (measured:
     * knn_label_ann agreement 0.70 raw vs 0.84 mixed; balance 747/1536
     * positive, mean plane-pair agreement 0.50). Pure integer arithmetic,
     * bit-identical as Spark literals and inline DuckDB SQL.
@@ -79,30 +81,23 @@ object Multimodal {
     if (g < BigInt(2147483648L)) 1L else -1L
   }
 
-  /** DuckDB-side ×10⁶ quantization of the float embedding to exact BIGINT
-    * components — the `qv` prepass under [[lshSigSql]]; the same
-    * round-half-up formula `embedding_project` uses, so a signature bit is
-    * a comparison of an exact integer sum, never a float threshold. */
-  val quantizeSql: String =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
-
   /** 32 deterministic ±1 hyperplanes packed into a 32-bit sign signature —
     * the bucketing primitive for LSH ANN (`ann_lsh_bucket` 8×4-bit bands,
-    * `knn_label_ann` 10×3-bit). Plane family DERANDOMIZED round 12 from
-    * seeded Gaussians to [[lshPlaneSign]] hash signs over ×10⁶-quantized
-    * integer components, which makes the signature — and therefore both
-    * ANN keys — bit-exact cross-engine and fully oracle-checkable. Shapes
-    * re-swept r12 on the fixture (sf0.001, 50 probes): ann 8×4 recall@3
-    * 0.66 at 41% avg candidates (6×4: 0.58/33%); knn 10×3 label agreement
-    * 0.88 at 72% (the r7 8×3 shape fell to 0.74 under ±1 planes — hash
-    * signs discriminate slightly worse than Gaussians per plane, so both
-    * keys buy recall back with more planes, not coarser bands).
+    * `knn_label_ann` 10×3-bit). The planes are [[lshPlaneSign]] hash
+    * signs over [[IntVec]]-quantized integer components, not seeded
+    * Gaussians, which makes the signature — and therefore both ANN keys —
+    * bit-exact cross-engine and fully oracle-checkable. Shapes swept on
+    * the fixture (sf0.001, 50 probes): ann 8×4 recall@3 0.66 at 41% avg
+    * candidates (6×4: 0.58/33%); knn 10×3 label agreement 0.88 at 72%
+    * (8×3 reaches 0.74 under ±1 planes — hash signs discriminate slightly
+    * worse than Gaussians per plane, so both keys buy recall back with
+    * more planes, not coarser bands).
     *
     * WHY A UDF and not the flat-literal codegen expression
     * embedding_project uses: at 8×64 = 512 terms the flat form is the fast
     * path, but this signature is 32×64 = 2048 terms + 32 case-whens, and
     * that ~4k-node tree gets duplicated into both join branches of the
-    * banded candidate join — measured r12 at sf0.1: 5.3 s initial
+    * banded candidate join — measured at sf0.1: 5.3 s initial
     * planning, ~5 s STEADY per run (AQE re-optimizes the tree per stage
     * and Janino recompiles the giant generated methods), vs ~1 s total
     * with this compiled UDF computing the identical integer arithmetic.
@@ -122,8 +117,7 @@ object Multimodal {
         var acc = 0L
         var j = 0
         while (j < n) {
-          // exact ×10⁶ round-half-up quantization, same as quantizeSql
-          acc += row(j) * math.floor(emb(j).toDouble * 1000000d + 0.5d).toLong
+          acc += row(j) * IntVec.quantize(emb(j))
           j += 1
         }
         if (acc > 0) sig |= (1L << p)

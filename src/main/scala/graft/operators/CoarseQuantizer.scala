@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.IntVec
+
 /** Driver-side deterministic integer Lloyd's algorithm for IVF coarse
   * quantizers.
   *
@@ -13,22 +15,16 @@ package graft.operators
   * Assignment of the FULL corpus to centroids stays distributed (one
   * map-side pass, see call site).
   *
-  * DERANDOMIZED round 12 (was: seeded-RNG init over float vectors —
-  * reproducible but engine-specific, keeping ann_ivf rows-only): init is
-  * the first k rows of the caller's deterministic sample order, all
-  * arithmetic is exact ×10⁶-quantized integers (squared-euclidean BIGINT
-  * distances, argmin ties to the LOWEST cluster index, truncating integer
-  * means — the kmeans_iter discipline), and a cluster that goes empty
-  * keeps its previous centroid. Every step is plain integer arithmetic a
-  * SQL oracle replays bit-for-bit (LlmOps.ivfOracleSql).
+  * Init is the first k rows of the caller's deterministic sample order,
+  * and every step is [[IntVec]]'s exact ×10⁶ integer arithmetic: nearest
+  * centroid with ties to the lowest index, truncating integer means, and
+  * a cluster that goes empty keeps its previous centroid. A SQL oracle
+  * replays it bit-for-bit (`IntVec.lloydDuck`).
   */
 object CoarseQuantizer {
 
   /** `sample` row-major ×10⁶-quantized vectors in the caller's
-    * deterministic order (all same dim); returns k integer centroids.
-    * Assignment metric: squared euclidean in exact BIGINT; ties go to the
-    * lowest cluster index (matches `row_number() OVER (ORDER BY d2, c)`).
-    */
+    * deterministic order (all same dim); returns k integer centroids. */
   def fitInt(sample: Array[Array[Long]], k: Int, iters: Int): Array[Array[Long]] = {
     require(sample.nonEmpty, "quantizer fit needs a non-empty sample")
     val n = sample.length
@@ -38,21 +34,8 @@ object CoarseQuantizer {
     val assign = new Array[Int](n)
     var it = 0
     while (it < iters) {
-      // assign (strict < keeps the FIRST best — lowest c on ties)
       var i = 0
-      while (i < n) {
-        var best = 0; var bestD = Long.MaxValue
-        var cc = 0
-        while (cc < centroids.length) {
-          var d2 = 0L; var j = 0
-          val cent = centroids(cc); val v = sample(i)
-          while (j < dim) { val df = v(j) - cent(j); d2 += df * df; j += 1 }
-          if (d2 < bestD) { bestD = d2; best = cc }
-          cc += 1
-        }
-        assign(i) = best
-        i += 1
-      }
+      while (i < n) { assign(i) = IntVec.nearest(sample(i), 0, centroids); i += 1 }
       // update: truncating integer mean (Long `/` truncates toward zero,
       // same as DuckDB `//` on the oracle side)
       val sums = Array.fill(centroids.length)(new Array[Long](dim))

@@ -207,7 +207,7 @@ object ConnectedComponents {
       nodes: DataFrame, edges: DataFrame): DataFrame = {
     val collected = edges.select(col("a"), col("b")).collect()
     val labelDf = labelFrame(spark, nodes.schema.fields.head, unionFind(collected))
-    // materialize = false (r22): labelDf is a driver-local LocalRelation,
+    // materialize = false: labelDf is a driver-local LocalRelation,
     // so the attach join's lineage (nodes scan + broadcast of literal
     // rows) never reads a retirable cache — the consumer's own sink can
     // populate the persisted frame without an extra count job here
@@ -222,7 +222,7 @@ object ConnectedComponents {
     * cache the caller is about to unpersist (alternatingStars' edge
     * cache); skippable when `labels` is a driver-local literal
     * (localSolve), where the lazy cache populates on the consumer's own
-    * first action instead of an extra count job (r22).
+    * first action instead of an extra count job.
     */
   private def attachLabels(nodes: DataFrame, labels: DataFrame,
       broadcastLabels: Boolean, materialize: Boolean = true): DataFrame = {
@@ -278,7 +278,6 @@ object ConnectedComponents {
       // the round's one substantive action: materializes the round's
       // caches and counts strict decreases
       val changed = next.filter(col("lbl") < col("prev_lbl")).count()
-      graft.plans.PlanProbe.capture("cc_round", next)
       // re-wrap as LogicalRDD: O(1) plan depth regardless of round count.
       // Pin the wrapped cache (a micro-job over `next`'s cache) BEFORE
       // retiring the round's intermediates, or the next round would

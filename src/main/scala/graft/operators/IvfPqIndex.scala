@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.IntVec
+
 /** The frozen IVF-PQ index model — the library-facing half of the
   * `ann_ivfpq` pipeline: a trained coarse-cell matrix plus the per-
   * subspace PQ codebooks, applied as ONE stateless map from (vec_id,
@@ -17,10 +19,9 @@ import org.apache.spark.sql.functions._
   * caller's policy; between refits the model is a broadcast-sized
   * closure (cells×64 + 16×16×4 longs).
   *
-  * Arithmetic parity: quantization (`floor(x·10⁶ + 0.5)`), strict-<
-  * argmins (lowest cell/code wins ties) and exact integer distances are
-  * the ann_ivf/ann_ivfpq discipline verbatim, so an encode of the
-  * training corpus reproduces the fit pipeline's own assignments
+  * Arithmetic parity: quantization, distances and argmins are
+  * [[graft.functions.IntVec]]'s, the same as the trainers', so an encode
+  * of the training corpus reproduces the fit pipeline's own assignments
   * bit-for-bit (gated in StreamingSpec).
   *
   * @param cells    coarse centroid matrix, ×10⁶ integer space
@@ -41,42 +42,12 @@ final case class IvfPqModel(cells: Array[Array[Long]],
       "null embedding reached the encoder — filter or impute upstream")
     require(emb.length == dim,
       s"embedding dim ${emb.length} != model dim $dim")
-    val qv = new Array[Long](emb.length)
-    var i = 0
-    while (i < qv.length) {
-      qv(i) = math.floor(emb(i).toDouble * 1000000d + 0.5d).toLong; i += 1
-    }
-    qv
-  }
-
-  private def argminCell(qv: Array[Long]): Int = {
-    var best = 0; var bestD = Long.MaxValue
-    var c = 0
-    while (c < cells.length) {
-      val cv = cells(c); var d2 = 0L; var j = 0
-      while (j < cv.length) { val df0 = qv(j) - cv(j); d2 += df0 * df0; j += 1 }
-      if (d2 < bestD) { bestD = d2; best = c }
-      c += 1
-    }
-    best
+    IntVec.quantize(emb)
   }
 
   private def encodeCodes(qv: Array[Long]): Array[Long] = {
     val subDim = dim / codebook.length // model geometry, never input-derived
-    Array.tabulate(codebook.length) { sub =>
-      val cents = codebook(sub)
-      var best = 0; var bestD = Long.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cv = cents(c); var d2 = 0L; var i = 0
-        while (i < cv.length) {
-          val df0 = qv(sub * subDim + i) - cv(i); d2 += df0 * df0; i += 1
-        }
-        if (d2 < bestD) { bestD = d2; best = c }
-        c += 1
-      }
-      best.toLong
-    }
+    Array.tabulate(codebook.length)(sub => IntVec.nearest(qv, sub * subDim, codebook(sub)).toLong)
   }
 
   /** Encode (vec_id, embedding) rows — batch or streaming — into index
@@ -90,7 +61,7 @@ final case class IvfPqModel(cells: Array[Array[Long]],
   def encode(df: DataFrame): DataFrame = {
     val encodeU = udf((emb: Seq[Float]) => {
       val qv = quantize(emb)
-      (argminCell(qv), encodeCodes(qv).toSeq)
+      (IntVec.nearest(qv, 0, cells), encodeCodes(qv).toSeq)
     })
     df.select(col("vec_id"), encodeU(col("embedding")).as("e"))
       .select(col("vec_id"), col("e._1").as("cluster"), col("e._2").as("codes"))
@@ -101,10 +72,10 @@ final case class IvfPqModel(cells: Array[Array[Long]],
   * (vec_id BIGINT, embedding ARRAY<FLOAT>) frame (the engine's own
   * `ann_ivf` / `ann_ivfpq` / `embedding_pq` / `ann_pq_adc` keys train
   * through exactly these functions on the fixture tables, so the public
-  * path IS the oracled path). All arithmetic is the ×10⁶ exact-integer
-  * discipline: deterministic hash-ordered sampling, integer Lloyd with
-  * strict-< / lowest-id tie-breaks, truncating integer means — two fits
-  * on the same frame produce the identical model.
+  * path IS the oracled path). All arithmetic is [[graft.functions.IntVec]]'s
+  * exact ×10⁶ integer space and Lloyd round over a deterministic
+  * hash-ordered sample — two fits on the same frame produce the
+  * identical model.
   */
 object IvfPqIndex {
 
@@ -120,8 +91,7 @@ object IvfPqIndex {
     val fitSample = vecs
       .orderBy(expr(sampleHash), col("vec_id")).limit(sampleCap)
       .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray
-        .map(f => math.floor(f.toDouble * 1000000d + 0.5d).toLong))
+      .map(r => IntVec.quantize(r.getSeq[Float](0)))
     CoarseQuantizer.fitInt(fitSample, nCells, iters)
   }
 
@@ -130,17 +100,17 @@ object IvfPqIndex {
     * and subspace frames, and `retire` — which unpersists exactly the
     * caches THIS run created (a plan another owner had already cached is
     * not touched; the Caching.scala ownership contract). */
-  private[graft] final case class PqFit(cent: Seq[(Int, Long, Seq[Long])],
+  private[graft] final case class PqFit(cent: Seq[((Int, Long), Seq[Long])],
       encoded: DataFrame, v: DataFrame, subv: DataFrame, retire: () => Unit)
 
   /** The (sub, code, centroid) rows as the [subspace][code][dim] matrix —
     * ONE assembly shared by [[fit]] and the engine's session-memoized
     * model accessor, so the codebook layout cannot drift between them. */
-  private[graft] def codebookMatrix(cent: Seq[(Int, Long, Seq[Long])],
+  private[graft] def codebookMatrix(cent: Seq[((Int, Long), Seq[Long])],
       subspaces: Int): Array[Array[Array[Long]]] = {
-    val byCode = cent.groupBy(_._1)
+    val bySub = cent.groupBy(_._1._1)
     Array.tabulate(subspaces)(sub =>
-      byCode(sub).sortBy(_._2).map(_._3.toArray).toArray)
+      bySub(sub).sortBy(_._1._2).map(_._2.toArray).toArray)
   }
 
   /** The full PQ trainer: quantize, slice into `subspaces`×`subDim`
@@ -158,9 +128,7 @@ object IvfPqIndex {
       out
     }
     val v = pin(vecs
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(floor(cast(x as double) * 1000000 + 0.5) as bigint))")
-        .as("qv")))
+      .select(col("vec_id"), expr(IntVec.quantizeSpark("embedding")).as("qv")))
     val subv = pin(v
       .select(col("vec_id"), explode(expr(s"sequence(0, ${subspaces - 1})")).as("sub"),
         col("qv"))
@@ -174,31 +142,24 @@ object IvfPqIndex {
     // index into (sub*codes + c) — fail loudly instead
     require(seedRows.length == codes,
       s"IVF-PQ codebook needs >= $codes vectors to seed, got ${seedRows.length}")
-    var cent: Seq[(Int, Long, Seq[Long])] = seedRows
+    var cent: Seq[((Int, Long), Seq[Long])] = seedRows
       .sortBy(_.getLong(0)).zipWithIndex.flatMap { case (r, c) =>
         val qv = r.getSeq[Long](1)
         (0 until subspaces).map(sub =>
-          (sub, c.toLong, qv.slice(sub * subDim, (sub + 1) * subDim)))
+          ((sub, c.toLong), qv.slice(sub * subDim, (sub + 1) * subDim)))
       }
     // assignment is a compiled-UDF argmin over the closure-captured
     // codebook (the ann_ivf assignU pattern): one MAP-ONLY pass over the
     // subspace rows, no centroid fan-out join and no (vec_id, sub)
     // argmin shuffle per round — the join+min(struct) form measured 4.0 s
-    // vs 1.5 s for this shape at sf0.1. Strict < keeps the lowest code on
-    // ties (= ORDER BY d2, c in the oracle).
-    def assignAgainst(cs: Seq[(Int, Long, Seq[Long])]) = {
+    // vs 1.5 s for this shape at sf0.1.
+    def assignAgainst(cs: Seq[((Int, Long), Seq[Long])]) = {
       val bySub = codebookMatrix(cs, subspaces) // the ONE assembly
       val assignU = udf((sub: Int, sv: Seq[Long]) => {
+        val q = sv.toArray
         val cents = bySub(sub)
-        var best = 0; var bestD = Long.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          val cv = cents(c); var d2 = 0L; var i = 0
-          while (i < cv.length) { val df0 = sv(i) - cv(i); d2 += df0 * df0; i += 1 }
-          if (d2 < bestD) { bestD = d2; best = c }
-          c += 1
-        }
-        (best.toLong, bestD)
+        val c = IntVec.nearest(q, 0, cents)
+        (c.toLong, IntVec.sqL2(q, 0, cents(c)))
       })
       subv.withColumn("m", assignU(col("sub"), col("sv")))
         .select(col("vec_id"), col("sub"), col("m._1").as("c"),
@@ -207,20 +168,10 @@ object IvfPqIndex {
     // `rounds` full Lloyd rounds (assign vs cent_{r-1}, update → cent_r),
     // then ONE encoding assignment against the final codebook — the
     // a1..aN + af structure of the generated oracle, aligned round for
-    // round. Empty codes keep their previous centroid (COALESCE twin).
-    for (_ <- 1 to rounds) {
-      val updated = assignAgainst(cent)
-        .select(col("sub"), col("c"), posexplode(col("sv")))
-        .groupBy("sub", "c", "pos")
-        .agg(expr("cast(sum(col) div count(*) as bigint)").as("cve"))
-        .collect().toSeq
-        .groupBy(row => (row.getInt(0), row.getLong(1)))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq) }
-      val have = updated.map(t => (t._1, t._2)).toSet
-      cent = (updated ++ cent.filterNot(t => have((t._1, t._2)))).toSeq
-        .sortBy(t => (t._1, t._2))
-    }
+    // round
+    for (_ <- 1 to rounds)
+      cent = IntVec.lloydUpdate(assignAgainst(cent), Seq("sub", "c"), "sv", cent)(
+        r => (r.getInt(0), r.getLong(1)))
     val encoded = pin(assignAgainst(cent).drop("sv"))
     PqFit(cent, encoded, v, subv,
       () => owned.foreach(_.unpersist(blocking = false)))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
-import graft.functions.ExactMoments
+import graft.functions.{ExactMoments, IntVec}
 import Sqlh.snap
 
 /** Round-8 data-curation / pipeline-analytics suite (SURVEY.md §2.13).
@@ -117,7 +117,7 @@ object Curation {
     * aggregate onto the minute DOMAIN, and concurrency is the running
     * sum over that domain. The running sum is the RANGE-PARTITIONED
     * two-pass prefix sum ([[graft.operators.RangePrefixSum]]), never a
-    * partition-less window (r20, VERDICT r19 item 4): the minute domain
+    * partition-less window: the minute domain
     * is bounded by wall-clock SPAN, which — unlike the fixed value
     * spaces of the other domain windows — grows with corpus age (~526k
     * minutes/year; a 10-year corpus would push ~5M rows through one
@@ -662,7 +662,7 @@ object Curation {
       .orderBy("fold", "label")
   }
 
-  /** Deterministic ML-inference under the oracle (r12) — the keyed twin
+  /** Deterministic ML-inference under the oracle — the keyed twin
     * of the MlSpec RF pipeline, on the same derived separable target (the
     * sign of the first embedding component; the fixture's `label` column
     * is independent of the vectors, so supervised structure must come
@@ -682,7 +682,7 @@ object Curation {
     */
   private val mlScore = Q("ml_score",
     s"""WITH q AS (SELECT vec_id, $foldSql AS fold,
-       |    list_transform(embedding, x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
+       |    ${IntVec.quantizeDuck("embedding")} AS qv
        |  FROM embeddings),
        |t AS (SELECT vec_id, fold, qv,
        |    CASE WHEN qv[1] > 0 THEN 1 ELSE 0 END AS target FROM q),
@@ -702,8 +702,7 @@ object Curation {
        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin) { (s, d) =>
     val q = graft.Caching.ensureCached(Tables.embeddings(s, d).select(
       col("vec_id"), expr(foldExpr).as("fold"),
-      expr(s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
-        .as("qv"))
+      expr(IntVec.quantizeSpark("embedding")).as("qv"))
       .withColumn("target", expr("case when element_at(qv, 1) > 0 then 1 else 0 end")))
     val cl = q.filter(col("fold") =!= 0)
       .select(col("target").as("c"), posexplode(col("qv")))
@@ -740,8 +739,8 @@ object Curation {
     * numerator/denominator are exact DECIMAL(38,0) cross-products
     * (n·Σxy − ΣxΣy overflows int64 at ~10¹⁹ — decimal from the start),
     * and the slope ships as slope_e6 = sign(num)·floor(1e6·|num|/den)
-    * via ExactRatio — exact integers only on the hash surface (the r14
-    * lesson: a hashed round(double) ratio flipped per oracle build).
+    * via ExactRatio — exact integers only on the hash surface (a hashed
+    * round(double) ratio can flip between oracle builds).
     * Scale: the tf aggregate is the only
     * O(data) stage; top-500 plans as a bounded TakeOrdered heap and the
     * rank window runs on 500 rows (bounded by construction, never a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.IntVec
 import Sqlh.snap
 
 /** Feature-engineering and linkage suite: the per-entity rolling features,
@@ -137,7 +138,7 @@ object Features {
     // first-word totals as a window over the bigram vocab domain
     // (bounded), not a separate aggregate joined back — the model pass
     // reads documents ONCE; only the scoring join pays the second
-    // tokenization (r17 scan audit: 3 scans -> 2)
+    // tokenization (3 scans -> 2)
     val bc = bg.groupBy("lang", "w1", "w2").agg(count(lit(1)).as("cb"))
     val lp = bc
       .withColumn("cf", sum("cb").over(Window.partitionBy("lang", "w1")))
@@ -244,8 +245,8 @@ object Features {
        |  SELECT c FROM tri) t
        |GROUP BY node ORDER BY node""".stripMargin) { (s, d) =>
     // pin the edge list: the triangle join consumes e THREE times, and
-    // unpinned each copy re-ran the banded levenshtein self-join (r17
-    // scan audit: 18 part scans / 9 DP joins in one plan — the edge
+    // unpinned each copy re-ran the banded levenshtein self-join (18
+    // part scans / 9 DP joins in one plan — the edge
     // table is vocabulary-bounded, so one cached materialization is the
     // honest shape); explode(array(…)) replaces the 3× unionAll of tri
     // so the triangle join itself also runs once, not three times
@@ -397,11 +398,10 @@ object Features {
 
   /** Shared basket builder for [[basketPairs]] / [[basketLift]]: per-order
     * sorted distinct part-type arrays (head noun of p_name; part dim
-    * broadcast). Pinned via pinOnce (r18, VERDICT r17 item 4): basket_lift
-    * consumes it from three subtrees, and the lazy ensureCached form let
-    * those consumers race to populate the cache at sink time — measured 16
-    * run jobs, the contention-amplification exposure the r17 action-count
-    * forensic identified. Materializing the pin up front is one job and
+    * broadcast). Pinned via pinOnce: basket_lift consumes it from three
+    * subtrees, and the lazy ensureCached form let those consumers race to
+    * populate the cache at sink time — measured 16 run jobs, each one
+    * exposure to host contention. Materializing the pin up front is one job and
     * every consumer stage then reads the built cache. The caller contract
     * is the usual graft.Caching one (harness clearCache retires it).
     */
@@ -698,9 +698,7 @@ object Features {
     * projection; the final ORDER BY is presentation only.
     */
   private val embeddingProject = Q("embedding_project",
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
-       |  FROM embeddings),
+    s"""WITH v AS (SELECT vec_id, ${IntVec.quantizeDuck("embedding")} AS qv FROM embeddings),
        |p AS (SELECT vec_id,
        |  list_transform(generate_series(0, 7), i ->
        |    CAST(list_sum(list_transform(generate_series(0, 63), j ->
@@ -729,9 +727,7 @@ object Features {
     // the driver's pandas comparator can hash it; proj_sum alone would not
     // pin the vector. The intermediate stays a real array column.
     Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
-        .as("qv"))
+      .select(col("vec_id"), expr(IntVec.quantizeSpark("embedding")).as("qv"))
       .select(col("vec_id"), expr(projExpr).as("proj"))
       .select(col("vec_id"),
         expr("array_join(transform(proj, x -> cast(x as string)), ',')").as("proj"),
@@ -806,9 +802,8 @@ object Features {
     * list ≤ 20 entries, fan-out ≤ df(df+1)/2 ≤ 210 per part (i ≤ j:
     * the diagonal self-pairs carry the norms), linear in parts, never
     * all-pairs over customers (the dedup_fuzzy / basket_pairs
-    * discipline; r18 replaced a w⋈w self-join, r19 folded the df cap
-    * into the same groupBy and moved the norm windows onto the
-    * aggregated pair frame). Everything else is combinable aggregates;
+    * discipline: no w⋈w self-join, the df cap in the same groupBy, and
+    * the norm windows on the aggregated pair frame). Everything else is combinable aggregates;
     * the norms ride the diagonal of the pair aggregate. Int64
     * bound: norm² ≤ (idfmax_e5 · Σtf)² — holds to idfmax·L ≈ 3×10⁹
     * weight-mass per customer; past that the two sums move to
@@ -839,16 +834,15 @@ object Features {
         graft.functions.ExactRatio.r2e6Stages(graft.functions.ExactRatio.DuckF,
           "dot_e10", "norm2_a", "norm2_b", "cos2_e6"))} q
        |ORDER BY cust_a, cust_b""".stripMargin) { (s, d) =>
-    // the (c, p, tf) purchase table is NOT pinned (r19): its only heavy
+    // the (c, p, tf) purchase table is NOT pinned: its only heavy
     // consumer is the single groupBy(p) chain below; the other consumer,
     // nc, is a 1-row countDistinct that Spark executes as an independent
-    // broadcast subtree CONCURRENTLY with the main scan. The r16-era pin
-    // predates that single-consumer shape (three window/join consumers
-    // then). Measured r19 A/B at sf0.1 idle: pinned 2.56 s vs unpinned
+    // broadcast subtree CONCURRENTLY with the main scan. Measured A/B
+    // at sf0.1 idle: pinned 2.56 s vs unpinned
     // 1.86 s — the persist+count+cache-write of the corpus-scale frame
     // cost more than nc's duplicated 2-column scan. At 100 TB the trade
     // is even more lopsided: the pin would materialize a customer×part
-    // cache (the pinOnce-spill class VERDICT r18 item 3 flags), while
+    // cache (a corpus-scale pin that spills), while
     // the nc subtree is a combinable partial countDistinct that never
     // holds state beyond its aggregation buffers.
     def cp = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
@@ -857,8 +851,7 @@ object Features {
       .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .agg(count(lit(1)).as("tf"))
     val nc = cp.agg(countDistinct("c").as("n"))
-    // r19 (VERDICT r18 item 1, the last weak key): the r18 shape ran a
-    // p→c→p shuffle ladder after a pinned cp (df window by part, n2
+    // A p→c→p shuffle ladder after a pinned cp (df window by part, n2
     // window by customer, THEN groupBy(p) for pair lists) — the c-window
     // between the two p-shuffles blocked exchange reuse and moved the
     // whole weight frame three times. This form moves it ONCE: a single
@@ -872,7 +865,7 @@ object Features {
     // windows over the SMALL aggregated pair frame (diag row (a,a) lives
     // in both partition ca=a and partition cb=a), not over the corpus.
     // Net: one consumer chain, no pin at all, two fewer full-frame
-    // shuffles. Measured idle (sf0.1): r18 2.32 s → 1.86 s. Fan-out per
+    // shuffles. Measured idle (sf0.1): ladder 2.32 s → 1.86 s. Fan-out per
     // part stays ≤ df(df+1)/2 ≤ 210 (diag adds ≤ 20) — the basket_pairs
     // discipline, never all-pairs over customers. sort_array orders each
     // (c, tf) list by c (distinct within a part), so i < j enumerates
@@ -932,8 +925,8 @@ object Features {
     * ships as share_e6 = floor(1e6·classRev/total) — exact integers
     * only. The running sum is the RANGE-PARTITIONED two-pass prefix sum
     * ([[graft.operators.RangePrefixSum]]), never a partition-less
-    * window: that shape single-tasks the whole part dimension (the r14
-    * bench pathology — 47 s under contention) and dies at 100× part
+    * window: that shape single-tasks the whole part dimension (measured
+    * 47 s under contention) and dies at 100× part
     * cardinality; here every stage is parallel and the only driver
     * state is one exact BigDecimal per partition. */
   private val partsAbc = Q("parts_abc",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.functions.IntVec
 import graft.multimodal.Multimodal
 import Sqlh.snap
 
@@ -40,6 +41,15 @@ object LlmOps {
     * chain. Declared BEFORE `all`: the Q list builds eagerly at object
     * init and bakes this into the oracle string. */
   private val kmeansRounds = 3
+
+  /** kmeans_iter's cluster count — the ONE copy behind its seed
+    * `limit` and the oracle's seed rank bound. Each Spark round inlines
+    * the k centroids as literals, k·d = 4·64 = 256 squared-gap terms in
+    * one map-side expression. That is well under the ~2k-term cliff
+    * measured on the flat LSH signature, where planning and Janino
+    * compile came to ~5 s per run (see `Multimodal.lshSigUdf`), so a
+    * larger k or d would need the UDF argmin of the PQ trainer instead. */
+  private val kmeansK = 4
 
   val all: Seq[Q] = Seq(
 
@@ -122,7 +132,7 @@ object LlmOps {
     // 100 TB this is a map-only pass that fuses into whatever scan
     // feeds it. The duplicate fractions ship as exact e6 integers
     // (floor of 1e6*(n-distinct)/n) - per-doc grain means millions of
-    // rows of boundary exposure, the class the r14 forensics killed.
+    // rows of boundary exposure to a double rendering.
     Q("text_repetition",
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          |g AS (SELECT doc_id, t, CASE WHEN len(t) >= 2 THEN
@@ -259,16 +269,16 @@ object LlmOps {
     // hashes (frequency-weighted — shingles, not distinct tokens: on a
     // small shared vocabulary token-set signatures collapse to hamming 0
     // for unrelated docs), 8x8-bit banded equi-join, Hamming re-rank.
-    // Hash-exact oracled since r12: the gram hash is TextSim's
-    // cross-engine word-polyhash composition and the 64 signature bits
-    // come from two salted 32-bit integer mixes of it (intMix 101/102) —
-    // DuckDB rebuilds the identical signatures (the r9-r11 xxhash64 form
-    // was engine-specific, rows-only). Selectivity still asserted in
+    // Hash-exact oracled: the gram hash is TextSim's cross-engine
+    // word-polyhash composition and the 64 signature bits come from two
+    // salted 32-bit integer mixes of it (intMix 101/102) — DuckDB rebuilds
+    // the identical signatures (an xxhash64 gram hash would be
+    // engine-specific). Selectivity still asserted in
     // MlSpec.
     Q("dedup_simhash", simhashOracleSql) { (s, d) =>
       // the shingle is hashed INSIDE the lambda (words polyhashed once,
       // grams composed from word hashes) — the explode emits longs, never
-      // materializing per-row gram strings (r9, same as jaccardPairs)
+      // materializing per-row gram strings (same as jaccardPairs)
       graft.functions.PolyHashArr.register(s)
       val shingles = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -314,8 +324,8 @@ object LlmOps {
     // ANN: 32 deterministic ±1 hash-sign hyperplanes -> 8x4-bit band
     // buckets -> candidate equi-join -> exact cosine re-rank, top-3. The
     // 100 TB path for similarity search (recall vs brute force asserted in
-    // MlSpec; band shape re-swept r12 — see lshSigUdf scaladoc).
-    // Oracled hash-exact since r12: the signature is integer arithmetic
+    // MlSpec; band shape swept in the lshSigUdf scaladoc).
+    // Oracled hash-exact: the signature is integer arithmetic
     // (Multimodal.lshPlaneSign), so DuckDB rebuilds the identical buckets.
     Q("ann_lsh_bucket",
       s"""WITH ${lshOracleCtes(nBands = 8, bandBits = 4)},
@@ -338,7 +348,7 @@ object LlmOps {
     // set instead of the brute-force all-pairs scan — same vote windows as
     // knn_label, candidates from the same banded join as ann_lsh_bucket.
     // A probe whose buckets surface fewer than 5 candidates votes over
-    // what it has (standard ANN behavior). Oracled hash-exact since r12
+    // what it has (standard ANN behavior). Oracled hash-exact
     // (deterministic hash-sign planes); label agreement vs brute-force
     // knn_label additionally gated in MlSpec.
     Q("knn_label_ann",
@@ -372,18 +382,16 @@ object LlmOps {
     // probe the nProbe nearest centroids, exact cosine re-rank of
     // candidates only. Complements ann_lsh_bucket: IVF adapts buckets to
     // the data distribution (better recall on clustered corpora), LSH
-    // needs no training. Hash-exact oracled since r12 (was rows-only:
-    // seeded-RNG float init): the fit runs in exact ×10⁶ integer space
-    // from a deterministic init (first 16 of the hash-ordered sample),
-    // centroid probing ranks by exact integer d2, and only the final
-    // cosine re-rank is double (the sim_cosine_topk discipline) — DuckDB
-    // replays the whole train+assign+probe+re-rank pipeline
-    // (ivfOracleSql). Recall@3 re-measured r12: 0.613 (was 0.44 seeded,
-    // gate >= 0.35 in MlSpec) at 97/500 avg candidates.
+    // needs no training. Hash-exact oracled: the fit runs in IntVec's
+    // exact ×10⁶ integer space from a deterministic init (first 16 of the
+    // hash-ordered sample), centroid probing ranks by exact integer d2,
+    // and only the final cosine re-rank is double (the sim_cosine_topk
+    // discipline) — DuckDB replays the whole train+assign+probe+re-rank
+    // pipeline (ivfOracleSql). Recall@3 on the fixture: 0.613 at 97/500
+    // avg candidates (gate >= 0.35 in MlSpec).
     Q("ann_ivf", ivfOracleSql) { (s, d) =>
       graft.functions.DotProduct.register(s)
       val e = Tables.embeddings(s, d)
-      val nClusters = 16
       // coarse quantizer, not a clustering deliverable: train on a
       // bounded DETERMINISTIC corpus-spread sample — bottom-k by the
       // decimal-before-multiply Knuth hash of vec_id (the ml_folds
@@ -396,34 +404,20 @@ object LlmOps {
       // fully-distributed form). The local integer Lloyd costs zero
       // Spark jobs beyond the sample scan; ASSIGNMENT of the full
       // corpus below stays distributed (one map-side pass).
-      val centroids = coarseFit(s, d, nClusters)
+      val centroids = coarseFit(s, d)
       // single-pass nearest-centroid assignment in exact integer space;
       // closure captures the (tiny) centroid matrix — same shape MLlib's
-      // transform would plan, without the pipeline overhead. Strict <
-      // keeps the lowest cluster index on ties (= ORDER BY d2, c).
+      // transform would plan, without the pipeline overhead
       val centMat = centroids.map(_._1)
-      val assignU = udf((emb: Seq[Float]) => {
-        var best = 0; var bestD = Long.MaxValue
-        var c = 0
-        while (c < centMat.length) {
-          val cent = centMat(c); var d2 = 0L; var j = 0
-          while (j < cent.length) {
-            val df = math.floor(emb(j).toDouble * 1000000d + 0.5d).toLong - cent(j)
-            d2 += df * df; j += 1
-          }
-          if (d2 < bestD) { bestD = d2; best = c }
-          c += 1
-        }
-        best
-      })
+      val assignU = udf((emb: Seq[Float]) => IntVec.nearest(IntVec.quantize(emb), 0, centMat))
       val assigned = TextSim.withVecNorm(
         e.select(col("vec_id"), col("embedding"),
-          expr(s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))").as("qv"),
+          expr(IntVec.quantizeSpark("embedding")).as("qv"),
           assignU(col("embedding")).as("cluster")), "v")
-      // per-probe: the 3 nearest centroids by EXACT integer d2 (r12 —
-      // was cosine in doubles; integer ranking removes the one ulp-rank
-      // risk in the probe step, and the probe set is what bounds the
-      // re-rank join). nProbe=3: candidate set stays ~20% of the corpus.
+      // per-probe: the 3 nearest centroids by EXACT integer d2 (an
+      // integer ranking has no ulp-rank risk, and the probe set is what
+      // bounds the re-rank join). nProbe=3: candidate set stays ~20% of
+      // the corpus.
       val centDf = s.createDataFrame(centroids.toIndexedSeq.map { case (cv, i) =>
         (i.toLong, cv.toSeq) }).toDF("c_id", "cv")
       val probes = assigned.filter(col("vec_id") < 50)
@@ -431,8 +425,7 @@ object LlmOps {
           col("v_n2").as("a_n2"))
       val wc = Window.partitionBy("a_id").orderBy(col("cd2").asc, col("c_id").asc)
       val probeClusters = probes.crossJoin(broadcast(centDf))
-        .withColumn("cd2", expr(
-          "aggregate(zip_with(qv, cv, (a, b) -> (a - b) * (a - b)), cast(0 as bigint), (acc, x) -> acc + x)"))
+        .withColumn("cd2", expr(IntVec.sqL2Spark("qv", "cv")))
         .withColumn("crnk", row_number().over(wc))
         .filter(col("crnk") <= 3)
         .select("a_id", "a_d", "a_n2", "c_id")
@@ -637,39 +630,36 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    // Distributed fixed-iteration k-means (k=4, 3 Lloyd rounds) over the
-    // embedding corpus — the fully-distributed trainer that closes
-    // ann_ivf's one scale caveat (its quantizer fits on a driver-collected
-    // sample; this one never leaves the cluster). Everything runs in
-    // exact ×10⁶-quantized integer space so all three rounds are
-    // bit-identical cross-engine: distances are BIGINT sums of squared
-    // integer gaps, and centroid updates are truncating integer means
-    // (`div`/`//` both truncate toward zero). Seeds = the 4 lowest-vec_id
-    // vectors (TakeOrdered, deterministic). The k×d centroids live on the
+    // Distributed fixed-iteration k-means ([[kmeansK]] clusters,
+    // [[kmeansRounds]] Lloyd rounds) over the embedding corpus — the
+    // fully-distributed trainer that closes ann_ivf's one scale caveat
+    // (its quantizer fits on a driver-collected sample; this one never
+    // leaves the cluster). All arithmetic is IntVec's exact ×10⁶ integer
+    // space, so every round is bit-identical cross-engine. Seeds = the k
+    // lowest-vec_id vectors (TakeOrdered, deterministic); a zero-
+    // dimensional seed seeds no centroid. The k×d centroids live on the
     // driver between rounds and are inlined into each round's plan as
     // literals, so assignment is a MAP-SIDE `array_min` over the k
-    // struct(d2, c) terms — the lexicographic argmin with the (distance,
-    // id) tie-break explicit, no join, no broadcast, no per-vector window.
+    // struct(d2, c) terms — no join, no broadcast, no per-vector window.
     // Per round: one exchange for the (c, pos) centroid mean and one
     // collect of the k×d result — O(rounds) stages, no driver-side data.
-    // Output: per-cluster size, exact-decimal inertia (to the round-2
-    // centroids vectors were assigned against), and the round-3 centroid
+    // A cluster that goes empty keeps its previous centroid. Output: per
+    // non-empty cluster its size, exact-decimal inertia (to the centroids
+    // the final round assigned against), and the final centroid
     // component checksum. An empty corpus yields zero rows.
     Q("kmeans_iter", kmeansOracle) { (s, d) =>
       import s.implicits._
       val v = graft.Caching.ensureCached(Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(
-          s"transform(embedding, x -> cast(${snap("cast(x as double)", 6)} as bigint))")
-          .as("qv")))
-      // The model state (k×d = 256 longs) lives on the driver between
-      // rounds — model size, not data size (the broadcast-equivalent
-      // bound, like ExactQuantiles' partition counts). Baking each
-      // round's centroids in as a literal keeps every round ONE pass
-      // over the cached corpus instead of a lineage that re-executes
-      // all prior rounds per action.
-      var cent: Seq[(Long, Seq[Long])] = v.orderBy("vec_id").limit(4)
+        .select(col("vec_id"), expr(IntVec.quantizeSpark("embedding")).as("qv")))
+      // The model state (k×d longs) lives on the driver between rounds —
+      // model size, not data size (the broadcast-equivalent bound, like
+      // ExactQuantiles' partition counts). Baking each round's centroids
+      // in as a literal keeps every round ONE pass over the cached corpus
+      // instead of a lineage that re-executes all prior rounds per action.
+      var cent: Seq[(Long, Seq[Long])] = v.orderBy("vec_id").limit(kmeansK)
         .collect().toSeq.sortBy(_.getLong(0)).zipWithIndex
         .map { case (r, i) => (i.toLong, r.getSeq[Long](1)) }
+        .filter(_._2.nonEmpty)
       // Jobs at the KeyProbeSpec config (sf0.001, local[4]): build 8, run
       // 5, pinned there. At other scale factors or core counts AQE plans
       // other stage jobs, so KeyProbe counts there are not comparable.
@@ -678,17 +668,8 @@ object LlmOps {
         // assign, and `array_min(array())` would not analyze
         if (c.isEmpty) v.select(col("vec_id"), col("qv"), lit(0L).as("c"), lit(0L).as("d2"))
           .where(lit(false))
-        else {
-          val structs = c.map { case (ci, cv) =>
-            val arr = if (cv.isEmpty) "cast(array() as array<bigint>)"
-              else cv.map(x => s"${x}L").mkString("array(", ",", ")")
-            s"struct(aggregate(zip_with(qv, $arr, (a, b) -> (a - b) * (a - b)), " +
-              s"cast(0 as bigint), (acc, x) -> acc + x) AS d2, ${ci}L AS c)"
-          }.mkString(",")
-          v.select(col("vec_id"), col("qv"),
-              expr(s"array_min(array($structs))").as("m"))
-            .select(col("vec_id"), col("qv"), col("m.c").as("c"), col("m.d2").as("d2"))
-        }
+        else v.select(col("vec_id"), col("qv"), expr(IntVec.nearestLiteral("qv", c)).as("m"))
+          .select(col("vec_id"), col("qv"), col("m.c").as("c"), col("m.d2").as("d2"))
       var asgn: org.apache.spark.sql.DataFrame = null
       for (k <- 1 to kmeansRounds) {
         asgn = assignAgainst(cent)
@@ -696,20 +677,7 @@ object LlmOps {
         // collect and the returned output plan — cache it so the
         // distance pass runs once, not twice
         if (k == kmeansRounds) asgn = graft.Caching.ensureCached(asgn)
-        val upd = asgn
-          .select(col("c"), posexplode(col("qv")))
-          .groupBy("c", "pos")
-          .agg(expr("cast(sum(col) div count(*) as bigint)").as("cve"))
-        cent = upd
-          .collect().toSeq
-          .groupBy(_.getLong(0)).toSeq
-          .map { case (c, rows) =>
-            (c, rows.sortBy(_.getInt(1)).map(_.getLong(2))) }
-          .sortBy(_._1)
-        // round plan (argmin + centroid mean — the whole per-round pass)
-        // for the PLANS.md iterative-family evidence; no-op unless the
-        // capture conf is set
-        if (k == 1) graft.plans.PlanProbe.capture("kmeans_round", upd)
+        cent = IntVec.lloydUpdate(asgn, Seq("c"), "qv", cent)(_.getLong(0))
       }
       val cks = cent.map { case (c, cv) => (c, cv.sum) }.toDF("c", "cent_sum")
       asgn.groupBy("c")
@@ -732,13 +700,11 @@ object LlmOps {
     // a 64-bit code: the 32× compression that makes a 100 TB embedding
     // corpus ANN-searchable in memory. Scale shape: the codebook
     // (16×16×4 = 1024 longs) is driver model state per round; each
-    // round is one pass over the cached subspace frame with a combinable
-    // min(struct) argmin and a (sub, c, pos)-keyed combinable mean —
-    // nothing grows with the corpus but the two scans. Empty codes keep
-    // their previous centroid (the ivfOracleSql COALESCE discipline).
-    // Exactness: ×10⁶-quantized BIGINT space throughout; truncating
-    // integer means; (d2, c) tie-break explicit — the kmeans_iter parity
-    // argument verbatim, so DuckDB replays the identical fit (pqOracle).
+    // round is one pass over the cached subspace frame with a map-only
+    // UDF argmin and a (sub, c, pos)-keyed combinable mean — nothing
+    // grows with the corpus but the two scans. Exactness: IntVec's
+    // ×10⁶ integer space and Lloyd round throughout, so DuckDB replays
+    // the identical fit (pqOracle).
     Q("embedding_pq", pqOracle) { (s, d) =>
       val (_, encoded, _) = pqFit(s, d)
       encoded.groupBy("vec_id")
@@ -766,7 +732,7 @@ object LlmOps {
       import s.implicits._
       val (cent, encoded, v) = pqFit(s, d)
       val codesv = pqCodesFrame(encoded)
-      val centMap = cent.map(t => ((t._1, t._2), t._3)).toMap
+      val centMap = cent.toMap
       val dtab = v.filter(col("vec_id") < pqAdcProbes).collect().toSeq
         .map(r => (r.getLong(0), pqDistTable(r.getSeq[Long](1), centMap)))
         .toDF("a_id", "dt")
@@ -801,8 +767,8 @@ object LlmOps {
         .orderBy("vec_id", "rnk")
     },
 
-    // The refinement step standard IVF-PQ deployments put on top of ADC
-    // (r20, VERDICT r19 item 3): the annbench sweep measured recall@3
+    // The refinement step standard IVF-PQ deployments put on top of ADC:
+    // the annbench sweep measured recall@3
     // FLAT at 0.707 across nprobe 1..16 at 200k vectors — cell routing
     // already reaches every true neighbor, ADC quantization error is
     // what misorders the top-3 — and exact re-rank of the top-8 ADC
@@ -829,9 +795,7 @@ object LlmOps {
       broadcast(short)
         .join(v.select(col("vec_id"), col("qv").as("bqv")),
           col("b_id") === col("vec_id"))
-        .select(col("a_id"), col("b_id"), expr(
-          """aggregate(zip_with(bqv, pqv, (b, a) -> (b - a) * (b - a)),
-            |  cast(0 as bigint), (acc, x) -> acc + x)""".stripMargin).as("d2"))
+        .select(col("a_id"), col("b_id"), expr(IntVec.sqL2Spark("bqv", "pqv")).as("d2"))
         .withColumn("rnk", row_number().over(w2)).filter(col("rnk") <= 3)
         .select(col("a_id").as("vec_id"), col("b_id").as("neighbor_id"),
           col("rnk"), col("d2"))
@@ -853,14 +817,15 @@ object LlmOps {
       : (org.apache.spark.sql.DataFrame, Seq[(Long, Seq[Long])]) = {
     import s.implicits._
     val (cent, _, v) = pqFit(s, d)
-    val centMat = coarseFit(s, d, ivfPqCells).map(_._1)
+    val centMat = coarseFit(s, d).map(_._1)
     val corpus = ivfPqCorpus(s, d)
       .select(col("vec_id").as("b_id"), col("cluster"), col("codes"))
-    val centMap = cent.map(t => ((t._1, t._2), t._3)).toMap
+    val centMap = cent.toMap
     val probeVecs = v.filter(col("vec_id") < pqAdcProbes).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Long](1)))
     val probeRows = probeVecs.flatMap { case (aId, qv) =>
-      val cells = centMat.indices.map(c => (sqDistL(qv, centMat(c)), c))
+      val q = qv.toArray
+      val cells = centMat.indices.map(c => (IntVec.sqL2(q, 0, centMat(c)), c))
         .sorted.take(ivfPqNProbe).map(_._2)
       val dt = pqDistTable(qv, centMap)
       cells.map(cid => (aId, cid, dt))
@@ -872,14 +837,6 @@ object LlmOps {
       .withColumn("rnk", row_number().over(w)), probeVecs)
   }
 
-  /** Deterministic coarse-quantizer fit shared by `ann_ivf` /
-    * `ann_ivfpq`: bottom-65,536 corpus-spread sample by the
-    * decimal-Knuth hash of vec_id (planned as TakeOrdered — no global
-    * sort), then [[graft.operators.CoarseQuantizer.fitInt]]'s local
-    * integer Lloyd (16 centroids never justify distributed passes; the
-    * CORPUS assignment stays distributed at the call sites). Returns the
-    * centroid matrix zipped with cell ids.
-    */
   /** Per-(vec_id) PQ code arrays from the per-(vec, sub) encode frame —
     * the compressed-corpus table both ADC consumers scan. */
   private def pqCodesFrame(encoded: org.apache.spark.sql.DataFrame)
@@ -891,13 +848,11 @@ object LlmOps {
   /** One probe's flattened 16×16 ADC distance table (sub-major,
     * code-minor — index sub*pqCodes + c) against the trained codebook. */
   private def pqDistTable(qv: Seq[Long], centMap: Map[(Int, Long), Seq[Long]])
-      : IndexedSeq[Long] =
-    for (sub <- 0 until pqSubspaces; c <- 0 until pqCodes) yield {
-      val cv = centMap((sub, c.toLong))
-      (0 until pqSubDim).map { i =>
-        val df0 = qv(sub * pqSubDim + i) - cv(i); df0 * df0
-      }.sum
-    }
+      : IndexedSeq[Long] = {
+    val q = qv.toArray
+    for (sub <- 0 until pqSubspaces; c <- 0 until pqCodes)
+      yield IntVec.sqL2(q, sub * pqSubDim, centMap((sub, c.toLong)).toArray)
+  }
 
   /** The ADC scoring expression: sum of per-subspace table lookups over
     * the `codes` column against the broadcast `dt` column. ONE string
@@ -907,34 +862,16 @@ object LlmOps {
     s"""aggregate(sequence(0, ${pqSubspaces - 1}), cast(0 as bigint),
        | (acc, sub) -> acc + element_at(dt, sub * $pqCodes + cast(element_at(codes, sub + 1) as int) + 1))""".stripMargin
 
-  /** Exact integer squared L2 between a quantized vector and a centroid —
-    * the one argmin kernel of the coarse-cell assignments. */
-  private def sqDistL(qv: Seq[Long], cv: Array[Long]): Long = {
-    var d2 = 0L; var j = 0
-    while (j < cv.length) { val df0 = qv(j) - cv(j); d2 += df0 * df0; j += 1 }
-    d2
-  }
-
   /** The IVF-PQ index's compressed corpus table: (vec_id, cluster,
-    * codes) — every vector's coarse cell (assigned in the SAME ×10⁶
-    * integer space the fit trained in; strict < keeps the lowest cell on
-    * ties = ORDER BY d2, c) plus its PQ code ids. Consumed by the
+    * codes) — every vector's coarse cell ([[IntVec.nearest]] in the
+    * integer space the fit trained in) plus its PQ code ids. Consumed by the
     * `ann_ivfpq` query and exposed package-private as the batch
     * reference the streaming index-append gate compares against. */
   private[graft] def ivfPqCorpus(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val (_, encoded, v) = pqFit(s, d)
-    val centMat = coarseFit(s, d, ivfPqCells).map(_._1)
-    val cellU = udf((qv: Seq[Long]) => {
-      var best = 0; var bestD = Long.MaxValue
-      var c = 0
-      while (c < centMat.length) {
-        val d2 = sqDistL(qv, centMat(c))
-        if (d2 < bestD) { bestD = d2; best = c }
-        c += 1
-      }
-      best
-    })
+    val centMat = coarseFit(s, d).map(_._1)
+    val cellU = udf((qv: Seq[Long]) => IntVec.nearest(qv.toArray, 0, centMat))
     pqCodesFrame(encoded)
       .join(v.select(col("vec_id"), cellU(col("qv")).as("cluster")), "vec_id")
   }
@@ -946,12 +883,12 @@ object LlmOps {
   private[graft] def ivfPqModel(s: SparkSession, d: String)
       : graft.operators.IvfPqModel = {
     val (cent, _, _) = pqFit(s, d)
-    val cells = coarseFit(s, d, ivfPqCells).map(_._1)
+    val cells = coarseFit(s, d).map(_._1)
     graft.operators.IvfPqModel(cells,
       graft.operators.IvfPqIndex.codebookMatrix(cent, pqSubspaces))
   }
 
-  private val coarseFitMemo = new graft.SessionMemo[(String, Int), Array[(Array[Long], Int)]]
+  private val coarseFitMemo = new graft.SessionMemo[String, Array[(Array[Long], Int)]]
 
   /** Observable fit-run counters — ScaleSpec pins that the DRIVER'S
     * alphabetical key order (ann_ivf → ann_ivfpq → ann_lsh_bucket →
@@ -961,15 +898,20 @@ object LlmOps {
   private[graft] val coarseFitRuns = new java.util.concurrent.atomic.AtomicInteger
   private[graft] val pqFitRuns = new java.util.concurrent.atomic.AtomicInteger
 
-  private def coarseFit(s: SparkSession, d: String, nClusters: Int)
-      : Array[(Array[Long], Int)] =
+  /** Deterministic coarse-quantizer fit shared by `ann_ivf` /
+    * `ann_ivfpq`: [[graft.operators.IvfPqIndex.fitCells]]'s hash-ordered
+    * sample and local integer Lloyd (16 centroids never justify
+    * distributed passes; the CORPUS assignment stays distributed at the
+    * call sites). Returns the centroid matrix zipped with cell ids. */
+  private def coarseFit(s: SparkSession, d: String): Array[(Array[Long], Int)] =
     // session-memoized (graft.SessionMemo): ann_ivf and ann_ivfpq train
     // the identical deterministic quantizer — one sample collect + local
     // Lloyd per session, not one per caller
-    coarseFitMemo.getOrElseUpdate(s, (d, nClusters)) { case (ss, (dd, k)) =>
+    coarseFitMemo.getOrElseUpdate(s, d) { (ss, dd) =>
       coarseFitRuns.incrementAndGet()
       graft.operators.IvfPqIndex
-        .fitCells(Tables.embeddings(ss, dd).select("vec_id", "embedding"), k)
+        .fitCells(Tables.embeddings(ss, dd).select("vec_id", "embedding"), coarseCells,
+          coarseRounds, coarseSample)
         .zipWithIndex
     }
 
@@ -978,8 +920,8 @@ object LlmOps {
     * codebook) lives on the driver, so the only way two keys can share
     * the ENCODE plan is to share the literal DataFrame object — ScalaUDF
     * plan equality is closure identity, so a re-built encode plan can
-    * never hit the first caller's SQL-cache entry (the r12-documented
-    * ann_pq_adc double-fit). Memoizing the triple gives the second
+    * never hit the first caller's SQL-cache entry (ann_pq_adc would fit
+    * twice). Memoizing the triple gives the second
     * caller the identical frames: the training rounds never re-run and
     * the encode cache is found by object identity. After a session-level
     * `clearCache()` the frames lose their persistence but stay CORRECT
@@ -989,10 +931,10 @@ object LlmOps {
     * [[graft.SessionMemo]] on the next access.
     */
   private val pqFitMemo = new graft.SessionMemo[String,
-    (Seq[(Int, Long, Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+    (Seq[((Int, Long), Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
 
   private def pqFit(s: SparkSession, d: String)
-      : (Seq[(Int, Long, Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (Seq[((Int, Long), Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val (cent, encoded, v) = pqFitMemo.getOrElseUpdate(s, d)(pqFitImpl)
     // a clearCache() between consumers dropped the persistence; re-pin so
     // the second key's scan is cache-fed again (idempotent when warm)
@@ -1010,7 +952,7 @@ object LlmOps {
     * caches are deliberately NOT retired here — the returned frames are
     * the memo's to keep (pqFit re-pins them after a clearCache). */
   private def pqFitImpl(s: SparkSession, d: String)
-      : (Seq[(Int, Long, Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (Seq[((Int, Long), Seq[Long])], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     pqFitRuns.incrementAndGet()
     val f = graft.operators.IvfPqIndex.fitDetailed(
       Tables.embeddings(s, d).select("vec_id", "embedding"),
@@ -1018,103 +960,56 @@ object LlmOps {
     (f.cent, f.encoded, f.v)
   }
 
-  /** DuckDB twin of the 3-round integer k-means: nested CTEs d/a/cl/cent
-    * per Lloyd round, generated by the same loop count as the Spark side
-    * so the twins cannot drift. `//` and `div` both truncate toward zero,
-    * so the integer centroid means agree; `row_number ORDER BY d2, c`
-    * mirrors `min(struct(d2, c))`. */
+  /** DuckDB twin of kmeans_iter: [[IntVec.lloydDuck]]'s round chain
+    * over the quantized corpus, generated from the same k and round
+    * constants as the Spark loop so the twins cannot drift. */
   private def kmeansOracle: String = {
-    val iters = (1 to kmeansRounds).map { k =>
-      s"""d$k AS (SELECT v.vec_id, ct.c,
-         |    CAST(list_sum(list_transform(generate_series(1, 64),
-         |      i -> (v.qv[i] - ct.cv[i]) * (v.qv[i] - ct.cv[i]))) AS BIGINT) AS d2
-         |  FROM v CROSS JOIN cent${k - 1} ct),
-         |a$k AS (SELECT vec_id, c, d2 FROM (SELECT vec_id, c, d2,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d$k) t
-         |  WHERE rn = 1),
-         |cl$k AS (SELECT a.c, u.pos, CAST(sum(u.x) // count(*) AS BIGINT) AS cve
-         |  FROM a$k a JOIN u ON a.vec_id = u.vec_id
-         |  GROUP BY a.c, u.pos),
-         |cent$k AS (SELECT c, list(cve ORDER BY pos) AS cv FROM cl$k GROUP BY c)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
-       |  FROM embeddings),
-       |u AS (SELECT vec_id, unnest(qv) AS x, generate_subscripts(qv, 1) AS pos FROM v),
-       |cent0 AS (SELECT CAST(rn - 1 AS BIGINT) AS c, qv AS cv
-       |  FROM (SELECT qv, row_number() OVER (ORDER BY vec_id) AS rn FROM v) t WHERE rn <= 4),
-       |$iters
-       |SELECT a$kmeansRounds.c, CAST(count(*) AS BIGINT) AS n,
-       |  CAST(sum(CAST(a$kmeansRounds.d2 AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS inertia,
+    val r = kmeansRounds
+    s"""WITH v AS (SELECT vec_id, ${IntVec.quantizeDuck("embedding")} AS qv FROM embeddings),
+       |${IntVec.lloydDuck("", "v", "qv", Nil, 64,
+         s"SELECT * FROM (${lowestSeeds(kmeansK)}) s WHERE len(qv) > 0", r)}
+       |SELECT a$r.c, CAST(count(*) AS BIGINT) AS n,
+       |  CAST(sum(CAST(a$r.d2 AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS inertia,
        |  ck.cent_sum
-       |FROM a$kmeansRounds JOIN (SELECT c, CAST(list_sum(cv) AS BIGINT) AS cent_sum FROM cent$kmeansRounds) ck
-       |  ON a$kmeansRounds.c = ck.c
-       |GROUP BY a$kmeansRounds.c, ck.cent_sum ORDER BY a$kmeansRounds.c""".stripMargin
+       |FROM a$r JOIN (SELECT c, CAST(list_sum(cv) AS BIGINT) AS cent_sum FROM cent$r) ck
+       |  ON a$r.c = ck.c
+       |GROUP BY a$r.c, ck.cent_sum ORDER BY a$r.c""".stripMargin
   }
+
+  /** DuckDB: `(vec_id, qv, c)` for the `k` lowest vec_ids of `v`, c =
+    * 0…k−1 — the TakeOrdered seeds of kmeans_iter and the PQ trainer. */
+  private def lowestSeeds(k: Int): String =
+    s"""SELECT vec_id, qv, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS c
+       |  FROM v QUALIFY c < $k""".stripMargin
 
   /** PQ geometry: 64 dims = [[pqSubspaces]] × [[pqSubDim]]; [[pqCodes]]
     * codes per subspace, [[pqRounds]] integer-Lloyd rounds. One copy
     * feeds the Spark loop and the generated oracle. */
   // `final val` literals = compile-time constants: `all` above initializes
   // eagerly and bakes pqOracle into the Q BEFORE runtime val initializers
-  // would run (the MinhashK trap — a plain val here is still 0 when the
-  // oracle string is generated)
+  // would run (a plain val here is still 0 when the oracle string is
+  // generated)
   private final val pqSubspaces = 16
   private final val pqSubDim = 4
   private final val pqCodes = 16
   private final val pqRounds = 3
 
-  /** DuckDB twin of the product-quantization trainer: the kmeansOracle
-    * d/a/cl/cent round chain, with the subspace index riding as DATA —
-    * one CTE chain trains all [[pqSubspaces]] codebooks at once (the
-    * centroid key is (sub, c)). Empty codes keep their previous centroid
-    * (COALESCE left join, the ivfOracleSql discipline). `//` and `div`
-    * both truncate toward zero, `row_number ORDER BY d2, c` mirrors
-    * `min(struct(d2, c))` — the kmeans_iter parity argument verbatim.
-    */
   /** Shared CTE chain `v … cent{pqRounds}, df, af`: quantize → subspace
-    * slices → seeded codebook → [[pqRounds]] Lloyd rounds → per-vector
-    * per-subspace code assignment `af(vec_id, sub, c, d2)`. One builder
+    * slices → seeded codebook → [[pqRounds]] Lloyd rounds with the
+    * subspace index riding as DATA (the centroid key is (sub, c), so one
+    * chain trains all [[pqSubspaces]] codebooks) → per-vector
+    * per-subspace code assignment `af(vec_id, sub, c, d2)`. The DuckDB
+    * twin of [[graft.operators.IvfPqIndex.fitDetailed]]; one generator
     * feeds both `embedding_pq` and `ann_pq_adc`, so the two keys always
     * train the identical codebook. */
-  private def pqFitCtes: String = {
-    val iters = (1 to pqRounds).map { r =>
-      s"""d$r AS (SELECT t.vec_id, t.sub, ct.c,
-         |    CAST(list_sum(list_transform(generate_series(1, $pqSubDim),
-         |      i -> (t.sv[i] - ct.cv[i]) * (t.sv[i] - ct.cv[i]))) AS BIGINT) AS d2
-         |  FROM subv t JOIN cent${r - 1} ct ON ct.sub = t.sub),
-         |a$r AS (SELECT vec_id, sub, c, d2 FROM (SELECT vec_id, sub, c, d2,
-         |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, c) AS rn FROM d$r) q
-         |  WHERE rn = 1),
-         |cl$r AS (SELECT a.sub, a.c, u.pos, CAST(sum(u.x) // count(*) AS BIGINT) AS cve
-         |  FROM a$r a JOIN u ON u.vec_id = a.vec_id AND u.sub = a.sub
-         |  GROUP BY a.sub, a.c, u.pos),
-         |cent$r AS (SELECT p.sub, p.c, COALESCE(n.cv, p.cv) AS cv
-         |  FROM cent${r - 1} p LEFT JOIN
-         |    (SELECT sub, c, list(cve ORDER BY pos) AS cv FROM cl$r GROUP BY sub, c) n
-         |    ON n.sub = p.sub AND n.c = p.c)""".stripMargin
-    }.mkString(",\n")
-    s"""v AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv
-       |  FROM embeddings),
+  private def pqFitCtes: String =
+    s"""v AS (SELECT vec_id, ${IntVec.quantizeDuck("embedding")} AS qv FROM embeddings),
        |subv AS (SELECT vec_id, sub,
        |    qv[sub * $pqSubDim + 1 : sub * $pqSubDim + $pqSubDim] AS sv
        |  FROM v CROSS JOIN (SELECT unnest(generate_series(0, ${pqSubspaces - 1})) AS sub) ss),
-       |u AS (SELECT vec_id, sub, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
-       |  FROM subv),
-       |cent0 AS (SELECT sv.sub, CAST(t.rn - 1 AS BIGINT) AS c, sv.sv AS cv
-       |  FROM (SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS rn FROM v
-       |        QUALIFY rn <= $pqCodes) t
-       |  JOIN subv sv ON sv.vec_id = t.vec_id),
-       |$iters,
-       |df AS (SELECT t.vec_id, t.sub, ct.c,
-       |    CAST(list_sum(list_transform(generate_series(1, $pqSubDim),
-       |      i -> (t.sv[i] - ct.cv[i]) * (t.sv[i] - ct.cv[i]))) AS BIGINT) AS d2
-       |  FROM subv t JOIN cent$pqRounds ct ON ct.sub = t.sub),
-       |af AS (SELECT vec_id, sub, c, d2 FROM (SELECT vec_id, sub, c, d2,
-       |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, c) AS rn FROM df) q
-       |  WHERE rn = 1)""".stripMargin
-  }
+       |${IntVec.lloydDuck("", "subv", "sv", Seq("sub"), pqSubDim, lowestSeeds(pqCodes), pqRounds)},
+       |df AS (${IntVec.distDuck("subv", "sv", s"cent$pqRounds", Seq("sub"), pqSubDim)}),
+       |af AS (${IntVec.nearestDuck("df", "vec_id, sub")})""".stripMargin
 
   private def pqOracle: String =
     s"""WITH $pqFitCtes
@@ -1122,23 +1017,30 @@ object LlmOps {
        |  CAST(sum(d2) AS BIGINT) AS err2
        |FROM af GROUP BY vec_id ORDER BY vec_id""".stripMargin
 
-  /** DuckDB twin of ann_pq_adc: the shared fit/encode chain, then per
-    * probe a flattened 16×16 distance table (sub-major, code-minor — index
-    * sub*16+c+1), the corpus scored by pure table lookups, top-3 per
-    * probe by (adc2, b_id). All exact integers. */
-  private def pqAdcOracle: String =
-    s"""WITH $pqFitCtes,
-       |codesv AS (SELECT vec_id, list(c ORDER BY sub) AS codes FROM af GROUP BY vec_id),
+  /** The ADC inputs after [[pqFitCtes]]: `codesv(vec_id, codes)` the
+    * compressed corpus, `pr(a_id, qv)` the probes and `dte(a_id, dt)`
+    * each probe's flattened 16×16 distance table (sub-major, code-minor —
+    * index sub*16+c+1) against the trained codebook. */
+  private def pqAdcCtes: String =
+    s"""codesv AS (SELECT vec_id, list(c ORDER BY sub) AS codes FROM af GROUP BY vec_id),
        |pr AS (SELECT vec_id AS a_id, qv FROM v WHERE vec_id < $pqAdcProbes),
        |dt0 AS (SELECT p.a_id, ct.sub, ct.c,
-       |    CAST(list_sum(list_transform(generate_series(1, $pqSubDim),
-       |      i -> (p.qv[ct.sub * $pqSubDim + i] - ct.cv[i])
-       |         * (p.qv[ct.sub * $pqSubDim + i] - ct.cv[i]))) AS BIGINT) AS d2
+       |    ${IntVec.sqL2Duck("p.qv", "ct.cv", pqSubDim, s"ct.sub * $pqSubDim")} AS d2
        |  FROM pr p CROSS JOIN cent$pqRounds ct),
-       |dte AS (SELECT a_id, list(d2 ORDER BY sub, c) AS dt FROM dt0 GROUP BY a_id),
-       |adc AS (SELECT d.a_id, cv.vec_id AS b_id,
-       |    CAST(list_sum(list_transform(generate_series(0, ${pqSubspaces - 1}),
-       |      sub -> d.dt[sub * $pqCodes + CAST(cv.codes[sub + 1] AS INTEGER) + 1])) AS BIGINT) AS adc2
+       |dte AS (SELECT a_id, list(d2 ORDER BY sub, c) AS dt FROM dt0 GROUP BY a_id)""".stripMargin
+
+  /** The ADC score of corpus row `cv` against probe table row `d`. */
+  private def adcLookupSql: String =
+    s"""CAST(list_sum(list_transform(generate_series(0, ${pqSubspaces - 1}),
+       |      sub -> d.dt[sub * $pqCodes + CAST(cv.codes[sub + 1] AS INTEGER) + 1])) AS BIGINT)""".stripMargin
+
+  /** DuckDB twin of ann_pq_adc: the shared fit/encode chain and ADC
+    * tables, the corpus scored by pure table lookups, top-3 per probe by
+    * (adc2, b_id). All exact integers. */
+  private def pqAdcOracle: String =
+    s"""WITH $pqFitCtes,
+       |$pqAdcCtes,
+       |adc AS (SELECT d.a_id, cv.vec_id AS b_id, $adcLookupSql AS adc2
        |  FROM dte d CROSS JOIN codesv cv WHERE cv.vec_id <> d.a_id)
        |SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk, adc2
        |FROM (SELECT a_id, b_id, adc2,
@@ -1147,13 +1049,17 @@ object LlmOps {
 
   private final val pqAdcProbes = 50
 
-  /** IVF-PQ geometry: [[ivfPqCells]] coarse cells (= ann_ivf's 16),
-    * [[ivfPqNProbe]] cells probed per query. `final val` for the same
-    * object-initialization-order reason as the PQ constants above. */
-  private final val ivfPqCells = 16
+  /** Coarse-quantizer geometry shared by ann_ivf and the IVF-PQ keys:
+    * [[coarseCells]] cells fit by [[coarseRounds]] integer-Lloyd rounds
+    * on a [[coarseSample]]-row sample; [[ivfPqNProbe]] cells probed per
+    * IVF-PQ query. `final val` for the same object-initialization-order
+    * reason as the PQ constants above. */
+  private final val coarseCells = 16
+  private final val coarseRounds = 5
+  private final val coarseSample = 65536
   private final val ivfPqNProbe = 2
 
-  /** ADC-shortlist size the exact re-rank refines (r20). The 200k-vector
+  /** ADC-shortlist size the exact re-rank refines. The 200k-vector
     * annbench sweep measured recall@3 FLAT at 0.707 across nprobe 1..16
     * (routing already reaches every true neighbor's cell; ADC
     * quantization error is what misorders the top-3) and re-ranking the
@@ -1162,66 +1068,41 @@ object LlmOps {
     * nprobe. */
   private final val ivfPqRerank = 8
 
+  /** DuckDB twin of [[coarseFit]] and the corpus assignment, as CTEs
+    * named with prefix `p` over the quantized corpus `v(vec_id, qv)`:
+    * the hash-ordered sample `samp` (decimal-Knuth hash of vec_id, the
+    * Spark sample's order), the Lloyd chain seeded from its first
+    * [[coarseCells]] rows, `dall(vec_id, c, d2)` every vector against
+    * the trained cells, its nearest cell `asg`, and `probes(a_id, c_id)`
+    * — the `nProbe` nearest cells of each probe vec_id < `probeLimit`. */
+  private def coarseCtes(p: String, probeLimit: Int, nProbe: Int): String =
+    s"""${p}samp AS (SELECT vec_id, qv, row_number() OVER (ORDER BY
+       |    CAST(CAST(vec_id AS DECIMAL(19,0)) * 2654435761 % 4294967296 AS BIGINT), vec_id) AS rn
+       |  FROM v QUALIFY rn <= $coarseSample),
+       |${IntVec.lloydDuck(p, s"${p}samp", "qv", Nil, 64,
+         s"SELECT vec_id, CAST(rn - 1 AS BIGINT) AS c FROM ${p}samp WHERE rn <= $coarseCells",
+         coarseRounds)},
+       |${p}dall AS (${IntVec.distDuck("v", "qv", s"${p}cent$coarseRounds", Nil, 64)}),
+       |${p}asg AS (${IntVec.nearestDuck(s"${p}dall", "vec_id")}),
+       |${p}probes AS (SELECT vec_id AS a_id, c AS c_id
+       |  FROM (${IntVec.nearestDuck(s"${p}dall", "vec_id", nProbe)}) t
+       |  WHERE vec_id < $probeLimit)""".stripMargin
+
   /** Shared DuckDB CTE chain for the two IVF-PQ twins, ending at
     * `adc(a_id, b_id, adc2)`: the shared PQ fit/encode chain
-    * ([[pqFitCtes]]) plus an i-prefixed replay of [[ivfOracleSql]]'s
-    * coarse-quantizer chain (same 65,536 hash-ordered sample, same 5
-    * integer-Lloyd rounds with the COALESCE empty-cell discipline), then
-    * candidates restricted to the probes' [[ivfPqNProbe]]-nearest cells'
-    * members, scored by pure distance-table lookups. All exact integers,
-    * generated from the same constants as the Spark side so the twins
-    * cannot drift. ONE builder feeds both `ann_ivfpq` and
-    * `ann_ivfpq_rerank`, so the shortlist the re-rank refines is always
-    * exactly the search key's candidate set. */
-  private def ivfPqChainCtes: String = {
-    val iters = (1 to 5).map { r =>
-      s"""id$r AS (SELECT s.vec_id, ct.c,
-         |    CAST(list_sum(list_transform(generate_series(1, 64),
-         |      i -> (s.qv[i] - ct.cv[i]) * (s.qv[i] - ct.cv[i]))) AS BIGINT) AS d2
-         |  FROM isamp s CROSS JOIN icent${r - 1} ct),
-         |ia$r AS (SELECT vec_id, c FROM (SELECT vec_id, c,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM id$r) t
-         |  WHERE rn = 1),
-         |icl$r AS (SELECT a.c, u.pos, CAST(sum(u.x) // count(*) AS BIGINT) AS cve
-         |  FROM ia$r a JOIN isu u ON a.vec_id = u.vec_id
-         |  GROUP BY a.c, u.pos),
-         |icent$r AS (SELECT p.c, COALESCE(n.cv, p.cv) AS cv
-         |  FROM icent${r - 1} p LEFT JOIN
-         |    (SELECT c, list(cve ORDER BY pos) AS cv FROM icl$r GROUP BY c) n
-         |    ON n.c = p.c)""".stripMargin
-    }.mkString(",\n")
+    * ([[pqFitCtes]]) plus an i-prefixed [[coarseCtes]], then candidates
+    * restricted to the probes' [[ivfPqNProbe]]-nearest cells' members,
+    * scored by pure distance-table lookups. ONE generator feeds both
+    * `ann_ivfpq` and `ann_ivfpq_rerank`, so the shortlist the re-rank
+    * refines is always exactly the search key's candidate set. */
+  private def ivfPqChainCtes: String =
     s"""$pqFitCtes,
-       |isamp AS (SELECT vec_id, qv, row_number() OVER (ORDER BY
-       |    CAST(CAST(vec_id AS DECIMAL(19,0)) * 2654435761 % 4294967296 AS BIGINT), vec_id) AS rn
-       |  FROM v QUALIFY rn <= 65536),
-       |isu AS (SELECT vec_id, unnest(qv) AS x, generate_subscripts(qv, 1) AS pos FROM isamp),
-       |icent0 AS (SELECT CAST(rn - 1 AS BIGINT) AS c, qv AS cv FROM isamp WHERE rn <= $ivfPqCells),
-       |$iters,
-       |idall AS (SELECT vv.vec_id, ct.c,
-       |    CAST(list_sum(list_transform(generate_series(1, 64),
-       |      i -> (vv.qv[i] - ct.cv[i]) * (vv.qv[i] - ct.cv[i]))) AS BIGINT) AS d2
-       |  FROM v vv CROSS JOIN icent5 ct),
-       |iasg AS (SELECT vec_id, c FROM (SELECT vec_id, c,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM idall) t
-       |  WHERE rn = 1),
-       |iprobes AS (SELECT vec_id AS a_id, c AS c_id FROM (SELECT vec_id, c,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS crnk FROM idall
-       |    WHERE vec_id < $pqAdcProbes) t WHERE crnk <= $ivfPqNProbe),
-       |codesv AS (SELECT vec_id, list(c ORDER BY sub) AS codes FROM af GROUP BY vec_id),
-       |pr AS (SELECT vec_id AS a_id, qv FROM v WHERE vec_id < $pqAdcProbes),
-       |dt0 AS (SELECT p.a_id, ct.sub, ct.c,
-       |    CAST(list_sum(list_transform(generate_series(1, $pqSubDim),
-       |      i -> (p.qv[ct.sub * $pqSubDim + i] - ct.cv[i])
-       |         * (p.qv[ct.sub * $pqSubDim + i] - ct.cv[i]))) AS BIGINT) AS d2
-       |  FROM pr p CROSS JOIN cent$pqRounds ct),
-       |dte AS (SELECT a_id, list(d2 ORDER BY sub, c) AS dt FROM dt0 GROUP BY a_id),
+       |${coarseCtes("i", pqAdcProbes, ivfPqNProbe)},
+       |$pqAdcCtes,
        |cand AS (SELECT p.a_id, b.vec_id AS b_id FROM iprobes p
        |  JOIN iasg b ON b.c = p.c_id AND b.vec_id <> p.a_id),
-       |adc AS (SELECT c.a_id, c.b_id,
-       |    CAST(list_sum(list_transform(generate_series(0, ${pqSubspaces - 1}),
-       |      sub -> d.dt[sub * $pqCodes + CAST(cv.codes[sub + 1] AS INTEGER) + 1])) AS BIGINT) AS adc2
+       |adc AS (SELECT c.a_id, c.b_id, $adcLookupSql AS adc2
        |  FROM cand c JOIN dte d ON d.a_id = c.a_id JOIN codesv cv ON cv.vec_id = c.b_id)""".stripMargin
-  }
 
   private def ivfPqOracle: String =
     s"""WITH $ivfPqChainCtes
@@ -1233,16 +1114,13 @@ object LlmOps {
   /** DuckDB twin of ann_ivfpq_rerank: the shared [[ivfPqChainCtes]]
     * shortlist (top-[[ivfPqRerank]] per probe by ADC), re-scored with
     * the EXACT integer L2 against the ×10⁶-quantized vectors, top-3 by
-    * (d2, b_id). All exact integers: |qv| ≲ 2×10⁶ so a 64-dim squared
-    * L2 is ≤ 64·(4×10⁶)² ≈ 10¹⁵ ≪ int64. */
+    * (d2, b_id). */
   private def ivfPqRerankOracle: String =
     s"""WITH $ivfPqChainCtes,
        |short AS (SELECT a_id, b_id FROM (SELECT a_id, b_id,
        |    row_number() OVER (PARTITION BY a_id ORDER BY adc2, b_id) AS rnk FROM adc) r
        |  WHERE rnk <= $ivfPqRerank),
-       |ex AS (SELECT sh.a_id, sh.b_id,
-       |    CAST(list_sum(list_transform(generate_series(1, 64),
-       |      i -> (bv.qv[i] - pv.qv[i]) * (bv.qv[i] - pv.qv[i]))) AS BIGINT) AS d2
+       |ex AS (SELECT sh.a_id, sh.b_id, ${IntVec.sqL2Duck("bv.qv", "pv.qv", 64)} AS d2
        |  FROM short sh JOIN v bv ON bv.vec_id = sh.b_id
        |  JOIN v pv ON pv.vec_id = sh.a_id)
        |SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk, d2
@@ -1291,7 +1169,7 @@ object LlmOps {
     * otherwise make its join key quadratic and serialise a shuffle
     * partition; Jaccard is then over each doc's rare-shingle set.
     *
-    * Shuffle shape (r7): the doc-frequency cap and the per-doc set size
+    * Shuffle shape: the doc-frequency cap and the per-doc set size
     * are WINDOW counts over the gram table, not a groupBy + join-back and
     * a sizes aggregation + two joins — two fewer shuffles and two fewer
     * joins of the (large) gram table; `n` rides through the pair join so
@@ -1317,16 +1195,16 @@ object LlmOps {
     // persisted + materialized by contract; the materialization count IS
     // the edge count (edges below is a 1:1 projection of jp), so it rides
     // into ConnectedComponents' size bound instead of a second count job
-    // over the cached pair frame (r22; -1 on warm re-entry = count there)
+    // over the cached pair frame (-1 on warm re-entry = count there)
     val (jp, m) = jaccardPairsCounted(s, d)
     val edges = jp.select(col("da").as("a"), col("db").as("b"))
     // endpoints-only CC: the callers' left join + coalesce already makes
     // every non-participant doc its own singleton cluster, so the label
     // set only needs to cover edge endpoints — on the (typical) local
     // path the labels come back as a driver-local literal with no
-    // attachment join and no cache to materialize (r13: two fewer
-    // shuffles + one fewer action per consumer under the driver bench's
-    // per-action contention exposure)
+    // attachment join and no cache to materialize (two fewer shuffles +
+    // one fewer action per consumer, each action being exposure to host
+    // contention)
     graft.operators.ConnectedComponents.minLabelFromEdges(edges, graphSizeHint = m)
       .withColumnRenamed("node", "p_id")
   }
@@ -1334,7 +1212,7 @@ object LlmOps {
   /** Shared LSH candidate generator for `ann_lsh_bucket` / `knn_label_ann`:
     * 32 deterministic ±1 hash-sign hyperplanes over ×10⁶-quantized integer
     * components (Multimodal.lshSigUdf — bit-exact cross-engine, so both
-    * consumers oracle hash-exact since r12) -> banded buckets -> banded
+    * consumers oracle hash-exact) -> banded buckets -> banded
     * equi-join of the bounded probe set (vec_id < probeLimit, broadcast)
     * against the full corpus. Returns one row per DISTINCT (probe,
     * candidate) pair as (a_id, b_id, b_lbl, sim) — never an all-pairs
@@ -1389,51 +1267,13 @@ object LlmOps {
        |ORDER BY da, db""".stripMargin
   }
 
-  /** DuckDB twin of the r12 deterministic ann_ivf pipeline: hash-ordered
-    * sample (decimal-Knuth of vec_id) → integer Lloyd (init = first 16 of
-    * the sample order; d/a/cl CTEs per round with COALESCE keeping an
-    * empty cluster's previous centroid, mirroring CoarseQuantizer.fitInt)
-    * → exact-integer corpus assignment and probe ranking → double cosine
-    * re-rank. Generated from the same k/round constants as the Spark
-    * side so the twins cannot drift.
-    */
-  private def ivfOracleSql: String = {
-    val k = 16
-    val iters = (1 to 5).map { r =>
-      s"""d$r AS (SELECT s.vec_id, ct.c,
-         |    CAST(list_sum(list_transform(generate_series(1, 64),
-         |      i -> (s.qv[i] - ct.cv[i]) * (s.qv[i] - ct.cv[i]))) AS BIGINT) AS d2
-         |  FROM samp s CROSS JOIN cent${r - 1} ct),
-         |a$r AS (SELECT vec_id, c FROM (SELECT vec_id, c,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d$r) t
-         |  WHERE rn = 1),
-         |cl$r AS (SELECT a.c, u.pos, CAST(sum(u.x) // count(*) AS BIGINT) AS cve
-         |  FROM a$r a JOIN u ON a.vec_id = u.vec_id
-         |  GROUP BY a.c, u.pos),
-         |cent$r AS (SELECT p.c, COALESCE(n.cv, p.cv) AS cv
-         |  FROM cent${r - 1} p LEFT JOIN
-         |    (SELECT c, list(cve ORDER BY pos) AS cv FROM cl$r GROUP BY c) n
-         |    ON n.c = p.c)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH v AS (SELECT vec_id, embedding,
-       |    list_transform(embedding, x -> CAST(${snap("CAST(x AS DOUBLE)", 6)} AS BIGINT)) AS qv,
-       |    CAST(CAST(vec_id AS DECIMAL(19,0)) * 2654435761 % 4294967296 AS BIGINT) AS hs
-       |  FROM embeddings),
-       |samp AS (SELECT vec_id, qv, row_number() OVER (ORDER BY hs, vec_id) AS rn
-       |  FROM v QUALIFY rn <= 65536),
-       |u AS (SELECT vec_id, unnest(qv) AS x, generate_subscripts(qv, 1) AS pos FROM samp),
-       |cent0 AS (SELECT CAST(rn - 1 AS BIGINT) AS c, qv AS cv FROM samp WHERE rn <= $k),
-       |$iters,
-       |dall AS (SELECT vv.vec_id, ct.c,
-       |    CAST(list_sum(list_transform(generate_series(1, 64),
-       |      i -> (vv.qv[i] - ct.cv[i]) * (vv.qv[i] - ct.cv[i]))) AS BIGINT) AS d2
-       |  FROM v vv CROSS JOIN cent5 ct),
-       |asg AS (SELECT vec_id, c FROM (SELECT vec_id, c,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM dall) t
-       |  WHERE rn = 1),
-       |probes AS (SELECT vec_id AS a_id, c AS c_id FROM (SELECT vec_id, c,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS crnk FROM dall
-       |    WHERE vec_id < 50) t WHERE crnk <= 3),
+  /** DuckDB twin of the ann_ivf pipeline: [[coarseCtes]]' integer
+    * Lloyd fit, corpus assignment and probe ranking, then the double
+    * cosine re-rank. Generated from the same constants as the Spark side
+    * so the twins cannot drift. */
+  private def ivfOracleSql: String =
+    s"""WITH v AS (SELECT vec_id, ${IntVec.quantizeDuck("embedding")} AS qv FROM embeddings),
+       |${coarseCtes("", 50, 3)},
        |cand AS (SELECT p.a_id, b.vec_id AS b_id FROM probes p
        |  JOIN asg b ON b.c = p.c_id AND b.vec_id <> p.a_id),
        |sims AS (SELECT cnd.a_id, cnd.b_id, ${TextSim.cosineSql("a", "b")} AS sim
@@ -1444,7 +1284,6 @@ object LlmOps {
        |SELECT a_id AS vec_id, b_id AS neighbor_id, CAST(rnk AS INT) AS rnk,
        |  CAST(${snap("sim", 3)} AS BIGINT) AS sim_e3
        |FROM r WHERE rnk <= 3 ORDER BY vec_id, rnk""".stripMargin
-  }
 
   /** DuckDB CTE twin of [[lshCandidates]] up to `sims(a_id, b_id, b_lbl,
     * sim)`: quantize → 32-plane hash-sign signature → banded buckets →
@@ -1455,7 +1294,7 @@ object LlmOps {
     */
   private def lshOracleCtes(nBands: Int, bandBits: Int): String = {
     val mask = (1 << bandBits) - 1
-    s"""qq AS (SELECT vec_id, label, ${Multimodal.quantizeSql} AS qv FROM embeddings),
+    s"""qq AS (SELECT vec_id, label, ${IntVec.quantizeDuck("embedding")} AS qv FROM embeddings),
        |sg AS (SELECT vec_id, label, ${Multimodal.lshSigSql} AS sig FROM qq),
        |bands AS (SELECT vec_id, label, bi, (sig >> (bi * $bandBits)) & $mask AS bv
        |  FROM sg CROSS JOIN (SELECT unnest(generate_series(0, ${nBands - 1})) AS bi) bb),
@@ -1503,7 +1342,7 @@ object LlmOps {
     // shingles are xxhash64'd to int64 INSIDE the transform lambda, so the
     // ~20-char gram strings never leave the expression: the distinct, both
     // window counts, the persisted table, and both sides of the pair join
-    // all carry 8-byte keys (r8 bench: the string-gram pipeline was 25.8 s
+    // all carry 8-byte keys (measured: the string-gram pipeline was 25.8 s
     // of the 107.6 s total and the source of a 4x run-to-run swing).
     // Semantics: exact-Jaccard only ever compares grams for EQUALITY, so a
     // result changes only on an intra-language 64-bit collision between two
@@ -1542,8 +1381,8 @@ object LlmOps {
   /** Bench-side warm entry for the rare-shingle pair kernel — the twin of
     * [[graft.queries.TextSim.warmMinhashKernel]]: pin the df-capped gram
     * table so a timed jaccard/containment-family key finds it warm (the
-    * kernel is the family's shared persisted artifact; see the r15
-    * verdict's untimed-kernel instruction). Caller retires the pin.
+    * kernel is the family's shared persisted artifact, built untimed).
+    * Caller retires the pin.
     */
   def warmPairKernel(s: SparkSession, d: String): Unit = {
     val (_, grams) = pairStats(s, d)
@@ -1557,7 +1396,7 @@ object LlmOps {
   /** [[jaccardPairs]] plus its materialized pair count (-1 on warm
     * re-entry): `clusterLabels` feeds the count straight into
     * ConnectedComponents' edge-count bound, saving the re-count job over
-    * the cached pair frame (r22). */
+    * the cached pair frame. */
   private[queries] def jaccardPairsCounted(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Long) = {
     val (stats, grams) = pairStats(s, d)

@@ -87,7 +87,7 @@ object Stats {
     * (no second fact scan), and the MAD median repeats the window on it.
     * vs the previous two-pass ExactQuantiles shape this is one scan and
     * one action — no per-pass boundary-collect jobs, no join back to the
-    * fact table (r16 verdict item 1; same-session head-to-head at sf0.1:
+    * fact table (same-session head-to-head at sf0.1:
     * 2.53 s old vs 2.41 s new — the key is collapse-bound, not
     * window-bound: the (flag, cent) collapse alone measures 0.92 s
     * because cents are ~97% distinct at this SF). Partitioned windows
@@ -171,7 +171,7 @@ object Stats {
        |FROM lp JOIN t ON lp.source = t.source
        |GROUP BY t.source, t.n_langs, t.t ORDER BY t.source""".stripMargin) { (s, d) =>
     // per-source totals as windows over the bounded (source, lang) cell
-    // domain — the kl_divergence/mutual_info discipline (r17: the old
+    // domain — the kl_divergence/mutual_info discipline (the old
     // aggregate-and-broadcast-back marginal re-scanned documents; 2
     // scans -> 1)
     val c = Tables.documents(s, d).groupBy("source", "lang")
@@ -215,7 +215,7 @@ object Stats {
        |FROM lr JOIN ts ON lr.source = ts.source
        |GROUP BY ts.source, ts.t ORDER BY ts.source""".stripMargin) { (s, d) =>
     // marginals as WINDOW columns over the cells table — the
-    // stats_mutual_info discipline (r17: the old broadcast-joined
+    // stats_mutual_info discipline (the old broadcast-joined
     // ts/g/tg marginal tables were 3 extra consumers of the cells
     // aggregate, re-scanning documents 4×; the windows ride the one
     // collapsed |sources|×|langs| domain, so the fact table is read
@@ -262,7 +262,7 @@ object Stats {
     // ONE window pass computes rank and class size together (same label
     // exchange), pinned as a 3-int-column frame so the min-class scalar
     // and the final aggregate are cache reads — the old n/m/kept/join
-    // shape re-scanned embeddings 4× (r17 scan audit); the embedding
+    // shape re-scanned embeddings 4×; the embedding
     // vectors themselves never enter the pinned projection
     val lbl = Window.partitionBy("label")
     val w = graft.Caching.pinOnce(Tables.embeddings(s, d)
@@ -295,7 +295,7 @@ object Stats {
        |        FROM toks WHERE length(tok) >= 2) t)
        |SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM pairs
        |GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50""".stripMargin) { (s, d) =>
-    // vocabulary reshape (r12, as bpe_apply_merge/bpe_train): pair counts
+    // vocabulary reshape (as bpe_apply_merge/bpe_train): pair counts
     // are count-weighted sums over the aggregated vocab — the explode
     // volume is the dictionary, not the corpus
     Tables.documents(s, d)
@@ -319,7 +319,7 @@ object Stats {
     * with the control char standing in for the merged symbol so adjacent
     * 2-char windows over the replaced string ARE the new symbol pairs;
     * the sentinel expands back to the merged pair in the output. Shape
-    * (r12, the bpe_train vocabulary reshape): ONE corpus aggregation into
+    * (the bpe_train vocabulary reshape): ONE corpus aggregation into
     * the (token, count) vocab, then both pair passes are vocab-bounded
     * count-weighted explodes into combinable aggregates; the winning pair
     * is model state (ONE row, broadcast); top-50 plans as
@@ -343,7 +343,7 @@ object Stats {
        |        FROM rep WHERE length(r) >= 2) t)
        |SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM p2
        |GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50""".stripMargin) { (s, d) =>
-    // bpe_train's vocabulary reshape (r12): aggregate the token stream
+    // bpe_train's vocabulary reshape: aggregate the token stream
     // ONCE, then both pair passes and the merge run over the vocab table
     // with count-weighted sums — identical results (the fresh sentinel
     // makes the replace injective), one corpus scan instead of three
@@ -438,16 +438,13 @@ object Stats {
     val layers = collection.mutable.ArrayBuffer(layer)
     val merges = collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     for (k <- 1 to BpeRounds) {
-      val winnerDf = layer.filter(length(col("r")) >= 2)
+      val winner = layer.filter(length(col("r")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, length(r) - 1), i -> substring(r, i, 2))")).as("pair"),
           col("c"))
         .groupBy("pair").agg(sum("c").as("cnt"))
         .orderBy(col("cnt").desc, col("pair")).limit(1)
-      val winner = winnerDf.collect()
-      // round plan (vocabulary-layer pair agg + argmax) for the PLANS.md
-      // iterative-family evidence; no-op unless the capture conf is set
-      if (k == 1) graft.plans.PlanProbe.capture("bpe_round", winnerDf)
+        .collect()
       // a corpus whose every token collapses below 2 symbols leaves no
       // pair to merge — fail with the cause rather than an index error
       // (the oracle's NULL-subquery replace would quietly no-op instead)
@@ -510,7 +507,7 @@ object Stats {
        |FROM cp JOIN singles sa ON cp.a = sa.t JOIN singles sb ON cp.b = sb.t
        |CROSS JOIN n
        |ORDER BY cab DESC, a, b LIMIT 50""".stripMargin) { (s, d) =>
-    // lazily cached deliberately (re-tested r21): pinning dt and singles
+    // lazily cached deliberately: pinning dt and singles
     // up front (pinOnce) to stop the broadcast subtrees racing the pair
     // pipeline for the cache measured SLOWER isolated (2.12 s vs 1.82 s
     // median) — the racers' duplicate work burns idle cores while the
@@ -658,7 +655,7 @@ object Stats {
     // ONE tokenization pass: dtf has one row per (doc, lang, tok), so the
     // document frequency is a plain count window over (lang, tok) on dtf
     // itself — the old separate countDistinct aggregate re-tokenized
-    // documents (r17 scan audit: 3 scans -> 2; the remaining n_docs pass
+    // documents (3 scans -> 2; the remaining n_docs pass
     // reads only the 2 narrow id/lang columns, no text)
     val dtf = toks.groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("lang", "tok")))
@@ -708,7 +705,7 @@ object Stats {
 
 
   /** The ORACLED exact companion of [[aggApproxPercentile]] (split out
-    * r12 so the rows-only set shrinks where the math allows): the same
+    * so the rows-only set shrinks where the math allows): the same
     * lineitem price quartiles through the same distributed
     * [[graft.operators.ExactQuantiles]] order-statistics pass, but
     * WITHOUT the engine-specific GK sketch riding alongside — quartile
@@ -823,9 +820,9 @@ object Stats {
     // actions, so the first EQ job materializes the cache and nothing
     // races to populate it (the pinOnce count exists for plans whose
     // concurrent subtrees would otherwise each rebuild the pipeline);
-    // dropping the explicit count saves its AQE job chain (r21 audit:
-    // build jobs 9 -> 6). Unpinned entirely each consumer re-ran the
-    // orders scan + per-customer aggregate (r17 scan audit: 4 scans -> 1).
+    // dropping the explicit count saves its AQE job chain (build jobs
+    // 9 -> 6). Unpinned entirely each consumer re-ran the orders scan +
+    // per-customer aggregate (4 scans -> 1).
     val c = graft.Caching.ensureCached(Tables.orders(s, d)
       .select(col("o_custkey"),
         // o_orderdate reads as TIMESTAMP_NTZ; the UTC session makes the
@@ -834,9 +831,9 @@ object Stats {
         expr(s"cast(${snap("o_totalprice", 2)} as bigint)").as("cents"))
       .groupBy("o_custkey")
       .agg(max("day").as("r"), count(lit(1)).as("f"), sum("cents").as("m")))
-    // ONE grouped ExactQuantiles pass for all nine boundaries (r21,
-    // VERDICT r20 item 3 — the key was the suite's most action-heavy at
-    // 19 jobs): the three dims stack into a (dim, value) table and the
+    // ONE grouped ExactQuantiles pass for all nine boundaries (three
+    // separate passes made the key the suite's most action-heavy at 19
+    // jobs): the three dims stack into a (dim, value) table and the
     // grouped boundary-collect operator ranges over it once, so the r/f/m
     // quartiles cost one range shuffle + two scalar collects instead of
     // one ExactQuantiles pass for m PLUS two in-plan crossJoin-broadcast
@@ -950,8 +947,8 @@ object Stats {
     // rows collapse FIRST onto the bounded (type, day) domain — day count
     // is wall-clock-bounded (the interval_concurrency argument), so the
     // midpoint and the ref/cur split derive from windows over that tiny
-    // table instead of re-scanning events per marginal (r17 scan audit:
-    // the old dd/mid/ct/t shape read events 4×; this is ONE O(data)
+    // table instead of re-scanning events per marginal (the old
+    // dd/mid/ct/t shape read events 4×; this is ONE O(data)
     // combinable aggregate, everything after runs on the domain).
     // Partition-less windows here are on the bounded domain —
     // PlansSpec-allowlisted.
@@ -1151,10 +1148,10 @@ object Stats {
     * so n·Sxy − Sx·Sy is exact on both engines and `cov_n2` (= n² ×
     * covariance) is engine-exact; it ships as cov_m9 = abs mod 1e9+7
     * (a bounded int64 witness — the driver's hash mangles any decimal128
-    * column, r15 forensics). The normalized
+    * column). The normalized
     * correlation ships as r2_e6 + r_sign — ExactRatio's shift-guarded
-    * integer rational; no double is hashed (the r14 driver forensics:
-    * a round(,6) ratio over sqrt terms flipped per oracle build).
+    * integer rational; no double is hashed (a round(,6) ratio over sqrt
+    * terms can flip between oracle builds).
     * Degenerate pairs are excluded by exact integer comparison on both
     * engines. Scale: ONE combinable aggregate over the
     * fact table to a single 15-number row; the 6-row pair matrix is a
@@ -1236,7 +1233,7 @@ object Stats {
     val jd = b.groupBy("flag", "x", "y").agg(count(lit(1)).as("c"))
     // both marginals as WINDOW columns over jd — never separate marginal
     // tables joined back: a (flag, x) marginal broadcast-joined to jd
-    // re-tested this round (r17) still reads lineitem TWICE (the join
+    // still reads lineitem TWICE (the join
     // pushes isnotnull key filters into only one jd subtree, so
     // ReuseExchange never fires — the stats_cramers_v lesson verbatim,
     // measured scans=2 and ~1 s slower). RANGE frames do both jobs in
@@ -1247,14 +1244,14 @@ object Stats {
       lit(2) * sum("c").over(o.rangeBetween(Window.unboundedPreceding, Window.currentRow)) -
         sum("c").over(o.rangeBetween(Window.currentRow, Window.currentRow)) + 1
     }
-    // Moment sums, size-guarded (r18): every per-row product c·r2x·r2y is
+    // Moment sums, size-guarded: every per-row product c·r2x·r2y is
     // bounded by 4n³ (c ≤ n, doubled ranks ≤ 2n), and so is each whole
     // per-flag SUM (Σc·max²). With n the per-flag row count (an unordered
     // window sharing the rank windows' exchange), a group with
     // n ≤ 1,000,000 has 4n³ = 4·10¹⁸ < 2⁶³−1 — the ENTIRE moment fits
     // int64, so the fast branch multiplies and sums codegen'd longs,
     // provably exact. Bigger groups take the DECIMAL(38,0)
-    // cast-before-multiply branch (exact at any size, ADVICE r14); the
+    // cast-before-multiply branch (exact at any size); the
     // branch is per-flag constant, so each group sums entirely on one
     // side and the other side contributes 0/NULL. Values are identical
     // by construction; only the arithmetic engine changes.
@@ -1466,12 +1463,12 @@ object Stats {
       .select(col("k"), col("n"), col("sst_n"), col("ssb_c2"),
         // ratio operands are DIVISION-FREE 128-bit products (the old
         // `sst_n div n` pre-division stage had an unguarded Spark `div`
-        // whose quotient wraps int64 at extreme scale — ADVICE r15):
+        // whose quotient wraps int64 at extreme scale):
         // f = ssb·(n−k)·n / (ssw_e·(k−1)) and η² = ssb·n / sst_n with
         // ssw_e = sst_n − n·ssb exact; formation overflow past 1e38
         // fails LOUD on both engines (ANSI decimal / HUGEINT), and the
         // only divisions left are ratE6Stages' shift-guarded ones.
-        // Scale ceiling (ADVICE r16): fa ≈ ssb·n² grows ~n² faster than
+        // Scale ceiling: fa ≈ ssb·n² grows ~n² faster than
         // the old pre-divided forms, so with cents² moments the 1e38 cap
         // is reached near n ≈ 1e8 rows per key — the key then fails
         // loudly instead of returning a result. Accepted trade (loud
@@ -1661,7 +1658,7 @@ object Stats {
     val pinned = graft.Caching.pinOnce(lp)
     val hn = pinned.groupBy("nat").agg(max("ctv").as("ct"), max("nv").as("nv"))
       // 0 − sum, not unary minus: Spark's decimal negate rounds to 34
-      // significant digits (the safeAbs class, ExactRatio r17) while
+      // significant digits (the ExactRatio.safeAbs class) while
       // subtraction is exact at all 38
       .agg((lit(0).cast("decimal(38,0)") - sum(expr("cast(ct as decimal(38,0))" +
         s" * cast(${snap("ln(cast(ct as double) / cast(nv as double))", 6)} as bigint)")))
@@ -1736,7 +1733,7 @@ object Stats {
     * lag(sign)) over the day order; and the normal-approximation z² is
     * an exact rational of (R, n1, n2) — z² = A²·(n−1) / (2·n1·n2·
     * (2·n1·n2 − n)) with A = (R−1)·n − 2·n1·n2 — shipped as z2_e6 +
-    * z_sign via ExactRatio. Magnitude contract (ADVICE r15 correction):
+    * z_sign via ExactRatio. Magnitude contract:
     * the numerator A²·(n−1) ~ 4n⁵ leaves int64 near ~4.6k observed days
     * — which is exactly why BOTH engines FORM it in 128-bit (HUGEINT /
     * DECIMAL(38,0), exact to n ~ 4·10⁶ days, loud overflow beyond) and
@@ -1825,8 +1822,8 @@ object Stats {
     import graft.functions.ExactRatio
     ExactRatio.applySparkDomain(base,
         // zn = za² · (n−1) ≥ 0 by construction, but Spark's bare decimal
-        // abs is the lossy decimal128 negate path on negatives (r17,
-        // ExactRatio.safeAbs) — route through the safe form for defense
+        // abs is the lossy decimal128 negate path on negatives
+        // (ExactRatio.safeAbs) — route through the safe form for defense
         ExactRatio.ratE6Stages(ExactRatio.SparkF,
           ExactRatio.safeAbs(ExactRatio.SparkF, "zn"), "zd", "z2_e6"))
       .select(col("event_type"), col("n_obs"), col("n_runs"),
@@ -1846,9 +1843,8 @@ object Stats {
     * columns; MarginSpec-gated), the cell is
     * (1e6·o − n·be6)² / (1e6·n·be6), floor-scaled ×10⁶ through
     * ExactRatio's shift-guarded ladder and summed exactly. No
-    * data-DEPENDENT double ever reaches the hash (ADVICE r15: the first
-    * cut floor-snapped a per-cell libm chain, re-importing the fragile
-    * class this suite had just evicted). Scale: ONE map-combinable count
+    * data-DEPENDENT double ever reaches the hash (a floor-snapped
+    * per-cell libm chain would re-import the fragile class). Scale: ONE map-combinable count
     * onto the 9-digit domain; everything after runs on 9 rows.
     */
   private val statsBenfordChisq = Q("stats_benford_chisq", {
@@ -2115,7 +2111,7 @@ object Stats {
       .filter(col("k") >= 2 && expr("n > k") && col("sst_n") > 0 && col("maxa") > 0)
       .select(col("k"), col("n"), col("sst_n"), col("ssb_c2"),
         // division-free ratio operands (see statsAnova — same rationale
-        // and the same ~n ≈ 1e8 loud-overflow scale ceiling, ADVICE r16)
+        // and the same ~n ≈ 1e8 loud-overflow scale ceiling)
         expr("cast(ssb_c2 as decimal(38,0)) * (n - k) * n").as("fa"),
         expr("greatest(cast(sst_n as decimal(38,0))" +
           s" - ${ExactMoments.nTimes(SparkF, "ssb_c2")}," +
@@ -2141,7 +2137,7 @@ object Stats {
     * discipline end to end: daily counts are BIGINTs, var_n2 =
     * n·Σc² − (Σc)² is an exact 128-bit integer witnessed as var_m9
     * (mod 1e9+7 — no decimal128 on the hash surface), and the
-    * ratio ships as fano_e6 = floor(1e6·var_n2/(n·Σc)) — the r15
+    * ratio ships as fano_e6 = floor(1e6·var_n2/(n·Σc)) — the
     * integer-rational rule; var/mean = (n·Σc²−S²)/(n·S) needs no
     * pre-shift (≤ ~1e29 at 100 TB daily volumes). Scale: ONE
     * map-combinable count onto the (type, day) domain is the only

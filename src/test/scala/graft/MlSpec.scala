@@ -185,39 +185,62 @@ class MlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
   }
 
   test("kmeans_iter matches a driver-side integer Lloyd re-derivation") {
-    val vecs = Tables.embeddings(s, d).select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray
-        .map(f => math.floor(f.toDouble * 1000000 + 0.5).toLong)))
-      .sortBy(_._1)
-    var cent: Map[Long, Array[Long]] = vecs.take(4).zipWithIndex
-      .map { case ((_, q), i) => i.toLong -> q }.toMap
-    var asgn: Map[Long, (Long, Long)] = Map.empty // vec -> (cluster, d2)
-    for (_ <- 1 to 3) {
-      asgn = vecs.map { case (id, q) =>
-        val (d2, c) = cent.toSeq.map { case (c0, cv) =>
-          var acc = 0L; var i = 0
-          while (i < q.length) { val g = q(i) - cv(i); acc += g * g; i += 1 }
-          (acc, c0)
-        }.min
-        id -> ((c, d2))
-      }.toMap
-      cent = vecs.groupBy(v => asgn(v._1)._1).map { case (c, grp) =>
-        // Long / truncates toward zero, matching div / //
-        c -> Array.tabulate(grp.head._2.length)(i => grp.map(_._2(i)).sum / grp.length)
+    // replays 3 integer Lloyd rounds from the 4 lowest-vec_id seeds on
+    // `dir`, checks kmeans_iter against it, and returns whether some
+    // cluster went empty in a round
+    def check(dir: String): Boolean = {
+      val vecs = Tables.embeddings(s, dir).select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray
+          .map(f => math.floor(f.toDouble * 1000000 + 0.5).toLong)))
+        .sortBy(_._1)
+      var cent: Map[Long, Array[Long]] = vecs.take(4).zipWithIndex
+        .map { case ((_, q), i) => i.toLong -> q }.toMap
+      var asgn: Map[Long, (Long, Long)] = Map.empty // vec -> (cluster, d2)
+      var emptied = false
+      for (_ <- 1 to 3) {
+        asgn = vecs.map { case (id, q) =>
+          val (d2, c) = cent.toSeq.map { case (c0, cv) =>
+            var acc = 0L; var i = 0
+            while (i < q.length) { val g = q(i) - cv(i); acc += g * g; i += 1 }
+            (acc, c0)
+          }.min
+          id -> ((c, d2))
+        }.toMap
+        val means = vecs.groupBy(v => asgn(v._1)._1).map { case (c, grp) =>
+          // Long / truncates toward zero, matching div / //
+          c -> Array.tabulate(grp.head._2.length)(i => grp.map(_._2(i)).sum / grp.length)
+        }
+        emptied ||= means.size < cent.size
+        // a cluster with no member keeps its previous centroid
+        cent = cent ++ means
       }
+      val rows = SparkEntry.queries("kmeans_iter")(s, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
+      val byC = vecs.groupBy(v => asgn(v._1)._1)
+      assert(rows.keySet == byC.keySet)
+      byC.foreach { case (c, grp) =>
+        val (n, inertia, centSum) = rows(c)
+        assert(n == grp.length, s"cluster $c size")
+        val want = grp.map(v => BigInt(asgn(v._1)._2)).sum.toDouble / 1e12
+        assert(inertia == want, s"cluster $c inertia $inertia != $want")
+        assert(centSum == cent(c).sum, s"cluster $c centroid checksum")
+      }
+      assert(rows.size >= 2, "clustering must keep at least two clusters")
+      emptied
     }
-    val rows = SparkEntry.queries("kmeans_iter")(s, d).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
-    val byC = vecs.groupBy(v => asgn(v._1)._1)
-    assert(rows.keySet == byC.keySet)
-    byC.foreach { case (c, grp) =>
-      val (n, inertia, centSum) = rows(c)
-      assert(n == grp.length, s"cluster $c size")
-      val want = grp.map(v => BigInt(asgn(v._1)._2)).sum.toDouble / 1e12
-      assert(inertia == want, s"cluster $c inertia $inertia != $want")
-      assert(centSum == cent(c).sum, s"cluster $c centroid checksum")
+    check(d)
+    // vec_id 1 carrying vec_id 0's embedding makes seeds 0 and 1 equal:
+    // cluster 1 loses every tie in round 1, goes empty, keeps its seed,
+    // and must win members back in a later round
+    TestSpark.withTempDir("graft_kmeans_dup") { dir =>
+      val e = Tables.embeddings(s, d)
+      val e0 = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+      e.withColumn("embedding",
+          when(col("vec_id") === 1, typedLit(e0)).otherwise(col("embedding")))
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(check(dir), "the duplicate seed must empty a cluster")
+      s.catalog.clearCache()
     }
-    assert(rows.size >= 2, "clustering must keep at least two clusters")
   }
 
   test("kmeans_iter returns zero rows on an empty corpus and on empty vectors") {

@@ -1,9 +1,9 @@
 {
 import java.nio.file.{Files, Paths}
 val d = "/root/testdata/sf0.1"
-// ALL keys (VERDICT r16 item 2: plan evidence for every key, not a
-// curated subset) - the registry is the source of truth, so a new key
-// automatically joins the dump.
+// ALL keys (plan evidence for every key, not a curated subset) - the
+// registry is the source of truth, so a new key automatically joins the
+// dump.
 val keys = graft.SparkEntry.queries.keys.toSeq.sorted
 val sb = new StringBuilder
 sb.append("""# PLANS -- physical-plan evidence at sf0.1
@@ -205,30 +205,49 @@ for (k <- keys) {
   sb.append(s"\n## $k\n\n```\n").append(plan.take(4000)).append("\n```\n")
 }
 
-// ---- iterative-family EXECUTED round plans (VERDICT r12 gap #1) ----
+// ---- iterative-family EXECUTED round plans ----
 // The multi-job operators do their real work in per-round actions whose
-// plans never appear in the returned frame; PlanProbe records each hooked
-// round's executed plan when the capture conf is set. dedup_cluster /
-// dedup_retention / graph_degree solve their (tiny, jac>=0.5) pair graphs
-// locally at every tested SF, so the distributed round below is captured
-// from a FORCED loop (localSolveMaxEdges = -1) over the REAL jaccard pair
-// graph — the exact plan the operator runs once the graph outgrows the
-// local bound.
-spark.conf.set("spark.graft.capturePlans", "true")
-graft.plans.PlanProbe.clear()
-spark.catalog.clearCache()
-// kmeans_iter + bpe_train execute their rounds while running normally
-graft.SparkEntry.queries("kmeans_iter")(spark, d).write.format("noop").mode("overwrite").save()
-spark.catalog.clearCache()
-graft.SparkEntry.queries("bpe_train")(spark, d).write.format("noop").mode("overwrite").save()
-spark.catalog.clearCache()
+// plans never appear in the returned frame, so this listener records the
+// executed plan of every action the three runs below make.
+// dedup_cluster / dedup_retention / graph_degree solve their (tiny,
+// jac>=0.5) pair graphs locally at every tested SF, so the distributed
+// round is captured from a FORCED loop (localSolveMaxEdges = -1) over the
+// REAL jaccard pair graph — the exact plan the operator runs once the
+// graph outgrows the local bound.
+val actionPlans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+  override def onSuccess(funcName: String,
+      qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+    actionPlans.add((funcName, qe.executedPlan.toString))
+  override def onFailure(funcName: String,
+      qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+}
+// the actions `body` makes, in order (listener events arrive on the
+// async bus: drain it before and after)
+def actionsOf(body: => Unit): Seq[(String, String)] = {
+  spark.catalog.clearCache()
+  org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+  actionPlans.clear()
+  body
+  org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+  Iterator.continually(actionPlans.poll()).takeWhile(_ != null).toSeq
+}
+def noop(df: org.apache.spark.sql.DataFrame): Unit =
+  df.write.format("noop").mode("overwrite").save()
+spark.listenerManager.register(listener)
 // forced distributed CC loop over the real pair graph (the
 // dedup_ngram_jaccard output IS the jac>=0.5 pair set)
 val ccEdges = graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, d)
   .select($"da".as("a"), $"db".as("b"))
-graft.operators.ConnectedComponents
-  .minLabelFromEdges(ccEdges, localSolveMaxEdges = -1L)
-  .write.format("noop").mode("overwrite").save()
+val runs = Seq(
+  "kmeans_iter: broadcast-literal centroids -> map-side array_min argmin -> (c, pos) combinable mean, per round" ->
+    actionsOf(noop(graft.SparkEntry.queries("kmeans_iter")(spark, d))),
+  "bpe_train: vocabulary-layer pair explosion -> combinable sum -> 1-row TakeOrdered argmax, per round" ->
+    actionsOf(noop(graft.SparkEntry.queries("bpe_train")(spark, d))),
+  "connected components (forced distributed loop, real jaccard pair graph): edge-cache join + min-label agg + pointer-jump self-join, per round" ->
+    actionsOf(noop(graft.operators.ConnectedComponents
+      .minLabelFromEdges(ccEdges, localSolveMaxEdges = -1L))))
+spark.listenerManager.unregister(listener)
 spark.catalog.clearCache()
 sb.append("""
 # Iterative-family executed round plans
@@ -238,23 +257,21 @@ the gram kernel + banded shingle equi-join (dumped above as
 `dedup_ngram_jaccard` — their pair graphs ARE that plan) feeding
 ConnectedComponents. At every tested SF the jac>=0.5 pair graph is tiny
 (79 edges at sf0.1), so the hybrid solves it driver-side (one bounded
-collect, labels return as a LocalRelation — the r13 endpoints-only fast
+collect, labels return as a LocalRelation — the endpoints-only fast
 path; the final plans above show the label join). The sections below are
-the EXECUTED per-round plans of the distributed paths — captured live via
-graft.plans.PlanProbe from a forced loop over the real pair graph and from
-kmeans_iter/bpe_train's actual runs — i.e. the plan shape each round pays
-once the data outgrows the local/model bound. Check: one shuffle join +
-one aggregation per round, no NLJ, no cartesian, no unpruned scan.
+the EXECUTED plans of every action the distributed paths make — recorded
+by a QueryExecutionListener from a forced loop over the real pair graph
+and from kmeans_iter/bpe_train's actual runs — i.e. the plan shape each
+round pays once the data outgrows the local/model bound. Check: one
+shuffle join + one aggregation per round, no NLJ, no cartesian, no
+unpruned scan.
 """)
-for ((key, title) <- Seq(
-    ("cc_round", "connected-components round (forced distributed loop, real jaccard pair graph): edge-cache join + min-label agg + pointer-jump self-join"),
-    ("kmeans_round", "kmeans_iter round: broadcast-literal centroids -> combinable min(struct) argmin -> (c, pos) combinable mean"),
-    ("bpe_round", "bpe_train round: vocabulary-layer pair explosion -> combinable sum -> 1-row TakeOrdered argmax"))) {
-  val p = graft.plans.PlanProbe.get(key).getOrElse(sys.error(s"probe $key not captured"))
-  sb.append(s"\n## $title\n\n```\n").append(p.take(5000)).append("\n```\n")
+for ((title, plans) <- runs) {
+  sb.append(s"\n## $title\n")
+  for (((fn, p), i) <- plans.zipWithIndex)
+    sb.append(s"\n### action ${i + 1} ($fn)\n\n```\n").append(p.take(5000)).append("\n```\n")
 }
-spark.conf.unset("spark.graft.capturePlans")
-Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+Files.writeString(Paths.get("PLANS.md"), sb.toString)
 println("PLANS_WRITTEN")
 }
 sys.exit(0)
